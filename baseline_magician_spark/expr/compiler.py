@@ -21,7 +21,6 @@ beyond 2^63 and the amd64 out-of-range conversion behavior
 
 from __future__ import annotations
 
-import math
 from collections.abc import Callable, Mapping
 
 from pyspark.sql import Column, DataFrame
@@ -363,16 +362,3 @@ def compile_column(
     col, _ = c.compile(node)
     return col
 
-
-def fold_constant(expr: str | Node) -> object | None:
-    """Best-effort driver-side constant folding for display/debug; returns
-    None unless the expression is parameter-free."""
-    from .interp import evaluate
-
-    try:
-        return evaluate(expr, {})
-    except Exception:
-        return None
-
-
-_ = math  # referenced in docstrings

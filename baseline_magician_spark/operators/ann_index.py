@@ -15,9 +15,9 @@ postings instead of re-assigning the corpus:
   directories (static partition pruning via an isin filter over the
   collected probe set), never the full corpus.
 
-Serving reuses the exact same probe/rescore expressions as the
-in-memory path (ivf_probe_cells / cosine), so a persisted serve is
-value-identical to the in-memory plan — which is precisely what the
+Serving reuses the in-memory path's probe and rescore kernels
+(``_ivf_probe_relation`` / ``_pairwise_score_relation``), so a
+persisted serve is value-identical to the in-memory plan — which is precisely what the
 ``similarity_ivf_serve_persisted`` driver row checks by sharing the
 in-memory oracle. Incremental add assigns NEW vectors under the
 PERSISTED centroids and appends their postings — the standard
@@ -51,8 +51,8 @@ def _assigned(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    # Arrow-batched numpy assignment (guide §4.2) — value-identical to
-    # the ivf_assign_cell expression, pinned in tests/test_similarity_np.py
+    # the Arrow-batched numpy assignment ivf_topk uses (guide §4.2),
+    # pinned against its expression twin in tests/test_similarity_np.py
     return _ivf_assign_relation(
         embeddings,
         sorted(centroids),

@@ -20,7 +20,6 @@ from ..operators.dedup import (
     exact_dedup_groups,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    simhash,
 )
 from ..registry import query
 
@@ -417,7 +416,7 @@ def corpus_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 8 planes + per-row mean centering (round 6): the raw positive-orthant
 # features collapsed to 4 buckets (5.6M candidate pairs at sf0.1);
 # centering restores 200+ buckets / 220k candidates — see
-# operators.similarity.lsh_bucket(center=True).
+# operators.similarity._lsh_bucket_relation(center=True).
 EMB_DUP_PLANES = 8
 EMB_DUP_THRESHOLD = 0.99995
 
@@ -437,9 +436,9 @@ def _doc_embedding_pairs_oracle() -> str:
     feat = "[" + ", ".join(terms) + "]"
 
     half = (_HP_MOD - 1) // 2
-    # Per-row mean centering mirrors lsh_bucket(center=True): the same
-    # left-to-right fold sum divided by the length, subtracted from
-    # each component before projecting (bit-identical double ops).
+    # Per-row mean centering mirrors _lsh_bucket_relation(center=True):
+    # the same left-to-right fold sum divided by the length, subtracted
+    # from each component before projecting (bit-identical double ops).
     mean = (
         "(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
         "list_transform(f, x -> CAST(x AS DOUBLE))), (x, y) -> x + y)"

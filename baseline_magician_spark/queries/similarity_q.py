@@ -14,7 +14,6 @@ from ..operators.similarity import (
     _HP_MOD,
     brute_force_topk,
     ivf_topk,
-    lsh_bucket,
     lsh_bucketed_pairs,
 )
 from ..registry import query
@@ -306,7 +305,8 @@ PQ_M = 4  # subspaces
 PQ_CODES = 16  # codes per subspace (seeded like the IVF centroids)
 _PQ_SUB = EMB_DIM // PQ_M
 
-# squared-L2 fold, same left-to-right order as operators.similarity.l2_sq
+# squared-L2 fold, same left-to-right order as
+# operators.similarity._np_seq_l2_pairs
 _L2 = (
     "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
     "list_transform(list_zip({a}, {b}), "

@@ -47,82 +47,71 @@ _loaded = False
 # families, freshly-fixed rows, and operators added this round — land
 # inside the checked window; everything else follows in registration
 # order. Rotate per round.
-# Round-11 window. Union of rounds 1-10: all 233 registered names
-# checked at least once, latest check green, max lag 4. EDF order:
-# - ALL 38 lag-4 names (last checked r6) first — they reach the
-#   MAX_LAG bound when CORRECTNESS_r11 lands, so every one must be
-#   in this window (tests/test_rotation_staleness.py enforces this);
-# - the 7 rows whose code or oracle changed this round (hash-probe
-#   dtype narrowing + cache, rounded constraint predicates,
-#   cache-tracker unpersist wiring);
-# - new round-11 registrations as they register (BPE tokenizer
-#   family; the ANN-persist and PNG rows take the last two slots).
-# CAPACITY POLICY (round 10): the staleness bound is ceil(N/50),
-# DERIVED from the live registry — growing it accepts a slower
-# re-check cadence automatically, with a deliberate hard ceiling of
-# 8 windows (400 queries) gated in tests/test_rotation_staleness.py
-# (full policy rationale lives there, next to the arithmetic).
+# Round-13 window. Rule: earliest deadline first over the
+# CORRECTNESS_r*.json history — every name whose latest recorded
+# check is at or past the capacity-derived lag bound (ceil(N/50) rounds,
+# tests/test_rotation_staleness.py) comes first, the most overdue
+# first and alphabetical within a round; the remaining slots go to
+# the most overdue rows whose code changed since their last check.
+# CAPACITY POLICY (round 10): the bound is DERIVED from the live
+# registry — growing it accepts a slower re-check cadence
+# automatically, with a deliberate hard ceiling of 8 windows (400
+# queries) gated in tests/test_rotation_staleness.py (full policy
+# rationale lives there, next to the arithmetic).
 _PRIORITY: tuple[str, ...] = (
-    # --- round-11 window (50 slots; EDF order) ---
-    # all 38 lag-4 names (last checked r6) — they hit the
-    # MAX_LAG = ceil(N/50) bound when CORRECTNESS_r11 lands
-    "ch_sql_ansi_spellings",
-    "ch_sql_arrayjoin_expression",
-    "ch_sql_association_stats",
-    "ch_sql_comma_join_analytic",
-    "ch_sql_dictget_lookup",
-    "ch_sql_file_read",
-    "ch_sql_interval_aggs",
-    "ch_sql_jaro_similarity",
-    "ch_sql_mutations",
-    "ch_sql_network_functions",
-    "ch_sql_numbers_rollup",
-    "ch_sql_retention_sequence",
-    "ch_sql_round6b_functions",
-    "ch_sql_round6e_functions",
-    "ch_sql_round6i_functions",
-    "ch_sql_stat_tests",
-    "ch_sql_state_merge_rollup",
-    "ch_sql_stats_aggregates",
-    "ch_sql_string_search",
-    "ch_sql_string_similarity",
-    "ch_sql_uniq_state_merge",
-    "ch_sql_url_time_functions",
-    "ch_sql_vector_functions",
-    "ch_sql_window_funnel",
-    "dedup_connected_components",
-    "dedup_duplicated_spans",
-    "dedup_embedding_cosine_pairs",
-    "ip_function_roundtrip",
-    "multimodal_y4m_decode",
-    "q10_returned_items",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q19_disjunctive_predicates",
-    "q7_volume_shipping",
-    "q8_national_market_share",
-    "q9_product_type_profit",
-    "streaming_cms_merge",
-    "streaming_funnel_levels",
-    # rows whose code or oracle changed in round 11: hash-probe
-    # dtype narrowing + resolution cache (ADVICE r10 medium /
-    # VERDICT task 5), constraint predicates on rounded metrics
-    # (ADVICE r10), cache-tracker unpersist wiring (ADVICE r10)
-    "ch_sql_cityhash64",
-    "ch_sql_numeric_hashes",
-    "ch_sql_hash_combine_chains",
-    "profile_constraint_checks",
-    "dedup_cdc_duplication_ratio",
-    "pipeline_training_export",
-    "pipeline_corpus_cleanup",
-    # new round-11 registrations (BPE tokenizer: iterated train,
-    # token-exact encode, exact-count packing — VERDICT task 1;
-    # ANN-persist + PNG rows claim the last 2 slots as they land)
-    "text_bpe_train",
-    "text_bpe_encode_counts",
-    "pipeline_packing_exact_tokens",
-    "similarity_ivf_serve_persisted",
-    "multimodal_png_decode",
+    # all 49 names last checked in r7 (lag 5 at r12 = the bound)
+    "ch_sql_agg_combinators",
+    "ch_sql_array_join_tokens",
+    "ch_sql_array_lambdas",
+    "ch_sql_asof_attribution",
+    "ch_sql_base58_roundtrip",
+    "ch_sql_calendar_bridges",
+    "ch_sql_categorical_iv",
+    "ch_sql_distinct_prewhere",
+    "ch_sql_extremes",
+    "ch_sql_geo_functions",
+    "ch_sql_group_cube",
+    "ch_sql_group_rollup",
+    "ch_sql_grouping_sets",
+    "ch_sql_join_dims",
+    "ch_sql_join_using",
+    "ch_sql_limit_by",
+    "ch_sql_lttb_downsample",
+    "ch_sql_map_functions",
+    "ch_sql_parametric_if",
+    "ch_sql_parametric_quantiles",
+    "ch_sql_round6_functions",
+    "ch_sql_round6d_functions",
+    "ch_sql_round6f_aggregates",
+    "ch_sql_round6h_aggregates",
+    "ch_sql_round7_functions",
+    "ch_sql_round7b_functions",
+    "ch_sql_round7c_functions",
+    "ch_sql_round7d_functions",
+    "ch_sql_round7e_aggregates",
+    "ch_sql_round7f_functions",
+    "ch_sql_sample_read",
+    "ch_sql_sequence_next_node",
+    "ch_sql_series_period_fft",
+    "ch_sql_summap_by_group",
+    "ch_sql_topk",
+    "ch_sql_tpch_q1",
+    "ch_sql_union_all",
+    "ch_sql_window_topn",
+    "ch_sql_with_fill",
+    "dedup_minhash_lsh_pairs",
+    "dedup_ngram_jaccard_pairs",
+    "multimodal_decode_stats",
+    "pipeline_leakage_safe_split",
+    "q12_late_shipment_priority",
+    "similarity_int8_topk",
+    "similarity_topk_cosine",
+    "text_bigram_lm_scores",
+    "text_gopher_quality",
+    "text_token_entropy",
+    # the most overdue (r8) of the 25 rows whose dedup / similarity /
+    # CDC operators lost their expression branch in round 13
+    "dedup_semantic_keep_best",
 )
 
 

@@ -10,6 +10,10 @@ oracle parity the driver checks.
   sub-document dedup (fixed-size blocks lose it).
 - Determinism under repartitioning: the boundary decision is a pure
   per-row function, so output is identical at any parallelism.
+
+The properties run against ``cdc_chunks_pandas``, the chunker every
+CDC query runs; one pin holds it row-identical to the expression
+rendering in tests/expr_twins.py.
 """
 
 from __future__ import annotations
@@ -18,10 +22,10 @@ import pyspark.sql.functions as F
 
 from baseline_magician_spark.operators.cdc import (
     WINDOW,
-    cdc_chunks,
     cdc_chunks_pandas,
     cdc_shared_chunks,
 )
+from tests.expr_twins import cdc_chunks_expr
 
 DOC = (
     "the quick brown fox jumps over the lazy dog while a train of "
@@ -39,7 +43,7 @@ def _chunks(spark, rows):
             r["chunk_len"],
             r["chunk_fp"],
         )
-        for r in cdc_chunks(df).collect()
+        for r in cdc_chunks_pandas(df).collect()
     }
 
 
@@ -78,7 +82,7 @@ def test_empty_and_tiny_documents(spark):
     df = spark.createDataFrame(
         [(1, ""), (2, "a"), (3, "ab")], "doc_id long, text string"
     )
-    rows = cdc_chunks(df).collect()
+    rows = cdc_chunks_pandas(df).collect()
     ids = {r["doc_id"] for r in rows}
     assert 1 not in ids  # empty doc -> no chunks
     for d, txt in ((2, "a"), (3, "ab")):
@@ -93,7 +97,7 @@ def test_empty_and_tiny_documents(spark):
 
 def test_pandas_path_value_identical_to_jvm(spark):
     """The sliding-recurrence mapInPandas chunker must emit exactly
-    the JVM slice-fold's rows — same constants, same codepoint
+    the expression slice-fold's rows — same constants, same codepoint
     stream, same spans, same fingerprints — including multibyte
     codepoints and boundary-free tiny docs."""
     import random
@@ -104,7 +108,7 @@ def test_pandas_path_value_identical_to_jvm(spark):
         for i, n in enumerate([0, 1, 5, 33, 64, 200, 401])
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(map(tuple, cdc_chunks(df).collect()))
+    a = sorted(map(tuple, cdc_chunks_expr(df).collect()))
     b = sorted(map(tuple, cdc_chunks_pandas(df).collect()))
     assert a == b
     assert a, "non-empty docs must produce chunks"
@@ -126,8 +130,8 @@ def test_repartition_invariant_and_shared_chunks(spark):
         (3, "unrelated text with nothing in common here at all"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(map(tuple, cdc_chunks(df).collect()))
-    b = sorted(map(tuple, cdc_chunks(df.repartition(7)).collect()))
+    a = sorted(map(tuple, cdc_chunks_pandas(df).collect()))
+    b = sorted(map(tuple, cdc_chunks_pandas(df.repartition(7)).collect()))
     assert a == b
     dup = cdc_shared_chunks(df, min_docs=2, min_len=8).collect()
     assert any(r["n_docs"] >= 2 for r in dup), (
@@ -164,7 +168,7 @@ def test_pandas_path_preserves_string_doc_ids(spark):
 def test_duplication_ratio_bounds_and_signal(spark):
     """cdc_duplication_ratio: ratios in [0, 1]; a doc sharing a long
     run with another doc scores high; a unique-content doc scores 0;
-    dup_chars never exceeds n_chars; JVM and pandas paths agree."""
+    dup_chars never exceeds n_chars."""
     import random
 
     from baseline_magician_spark.operators.cdc import (
@@ -195,8 +199,3 @@ def test_duplication_ratio_bounds_and_signal(spark):
     assert got[1]["dup_ratio"] > 0.5, "shared-run doc must score high"
     assert got[2]["dup_ratio"] > 0.5
     assert got[3]["dup_ratio"] == 0.0, "unique doc must score 0"
-    a = sorted(map(tuple, cdc_duplication_ratio(df).collect()))
-    b = sorted(
-        map(tuple, cdc_duplication_ratio(df, impl="jvm").collect())
-    )
-    assert a == b

@@ -110,27 +110,17 @@ def test_approx_stats_error_bounds(spark):
 
 def test_every_reference_setting_classifies():
     """C5 breadth: every setting in the driver's passthrough list
-    (ch/query_settings.go:28-217) must classify — an explicit mapping
-    or a category note; no reference setting may be 'unknown'."""
-    import re
-
+    (ch/query_settings.go:28-217, vendored verbatim as
+    tests/test_settings_audit.py::REFERENCE_QUERY_SETTINGS) must
+    classify — an explicit mapping or a category note; no reference
+    setting may be 'unknown'."""
     from baseline_magician_spark.control import (
         QUERY_SETTINGS_MAP,
         classify_setting,
     )
+    from tests.test_settings_audit import REFERENCE_QUERY_SETTINGS
 
-    src = open(
-        "/root/reference/vendor/github.com/ClickHouse/clickhouse-go/"
-        "query_settings.go"
-    ).read()
-    names = [
-        m.group(1)
-        for m in re.finditer(
-            r'^\s*\{"([a-z_0-9]+)", (?:uint|int|bool|time)QS\},',
-            src,
-            re.M,
-        )
-    ]
+    names = REFERENCE_QUERY_SETTINGS
     assert len(names) >= 180  # the full list, not a subset
     for n in names:
         conf, note = classify_setting(n)

@@ -48,11 +48,11 @@ def test_minhash_skips_shingleless_docs(spark, edge_docs):
 
 
 def test_simhash_defined_for_empty(spark, edge_docs):
-    from baseline_magician_spark.operators.dedup import simhash
+    from baseline_magician_spark.operators.dedup import simhash_relation
 
     got = {
-        r.doc_id: r.s
-        for r in edge_docs.select("doc_id", simhash("text").alias("s")).collect()
+        r["_id"]: r.sh
+        for r in simhash_relation(edge_docs, "text", "doc_id").collect()
     }
     # empty docs: zero votes -> every bit >= 0 -> all bits set
     assert got[0] == (1 << 30) - 1
@@ -149,15 +149,13 @@ def test_salted_join_rejects_outer_sides(spark):
         salted_join(f, d, "k", how="full")
 
 
-def test_minhash_bands_reject_non_divisible(spark):
-    from pyspark.sql import functions as F
+def test_minhash_bands_reject_non_divisible(spark, edge_docs):
+    from baseline_magician_spark.operators.dedup import minhash_band_relation
 
-    from baseline_magician_spark.operators.dedup import minhash_band_hashes
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="must divide"):
-        minhash_band_hashes(F.lit([1, 2, 3]), k=8, rows_per_band=3)
+    with pytest.raises(ValueError, match="must divide"):
+        minhash_band_relation(
+            edge_docs, "text", "doc_id", k=8, rows_per_band=3
+        )
 
 
 def test_split_assign_null_key_gets_null_label(spark):

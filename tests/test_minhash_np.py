@@ -1,16 +1,18 @@
-"""The numpy MinHash band relation must be row-identical to the JVM
-expression rendering (the oracle-replayable path) — same tokenizer,
-same codepoint stream, same fold constants, same band hashes."""
+"""The numpy MinHash, shingle and SimHash relations must be
+row-identical to their expression renderings in tests/expr_twins.py
+(the oracle-replayable spellings) — same tokenizer, same codepoint
+stream, same fold constants, same band hashes."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from baseline_magician_spark.operators.dedup import (
     minhash_band_relation,
-    minhash_lsh_pairs,
+    shingle_hash_relation,
+    simhash_relation,
 )
+from tests import expr_twins as twins
 
 ADVERSARIAL = [
     (1, "the quick brown fox jumps over the lazy dog"),
@@ -42,12 +44,8 @@ def adv_df(spark):
 
 
 def test_band_relation_pandas_equals_jvm_adversarial(adv_df):
-    got = _rows(
-        minhash_band_relation(adv_df, "text", "doc_id", impl="pandas")
-    )
-    want = _rows(
-        minhash_band_relation(adv_df, "text", "doc_id", impl="jvm")
-    )
+    got = _rows(minhash_band_relation(adv_df, "text", "doc_id"))
+    want = _rows(twins.minhash_band_relation_expr(adv_df, "text", "doc_id"))
     assert got == want
     assert len(want) > 0
 
@@ -56,21 +54,10 @@ def test_band_relation_pandas_equals_jvm_documents(spark):
     from tests.conftest import SF_SMOKE
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    got = _rows(
-        minhash_band_relation(docs, "text", "doc_id", impl="pandas")
-    )
-    want = _rows(minhash_band_relation(docs, "text", "doc_id", impl="jvm"))
+    got = _rows(minhash_band_relation(docs, "text", "doc_id"))
+    want = _rows(twins.minhash_band_relation_expr(docs, "text", "doc_id"))
     assert got == want
     assert len(want) > 0
-
-
-def test_lsh_pairs_pandas_equals_jvm_documents(spark):
-    from tests.conftest import SF_SMOKE
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    got = _rows(minhash_lsh_pairs(docs, "text", "doc_id"))
-    want = _rows(minhash_lsh_pairs(docs, "text", "doc_id", impl="jvm"))
-    assert got == want
 
 
 def test_band_relation_string_ids(spark):
@@ -78,37 +65,30 @@ def test_band_relation_string_ids(spark):
         [(f"id-{i}", t) for i, t in ADVERSARIAL if t],
         "doc_id string, text string",
     )
-    got = _rows(minhash_band_relation(df, "text", "doc_id", impl="pandas"))
-    want = _rows(minhash_band_relation(df, "text", "doc_id", impl="jvm"))
+    got = _rows(minhash_band_relation(df, "text", "doc_id"))
+    want = _rows(twins.minhash_band_relation_expr(df, "text", "doc_id"))
     assert got == want
 
 
 def test_band_relation_nondefault_params(adv_df):
     got = _rows(
         minhash_band_relation(
-            adv_df, "text", "doc_id", k=6, rows_per_band=3, shingle_n=2,
-            impl="pandas",
+            adv_df, "text", "doc_id", k=6, rows_per_band=3, shingle_n=2
         )
     )
     want = _rows(
-        minhash_band_relation(
-            adv_df, "text", "doc_id", k=6, rows_per_band=3, shingle_n=2,
-            impl="jvm",
+        twins.minhash_band_relation_expr(
+            adv_df, "text", "doc_id", k=6, rows_per_band=3, shingle_n=2
         )
     )
     assert got == want
 
 
 def test_shingle_relation_pandas_equals_jvm(adv_df, spark):
-    from baseline_magician_spark.operators.dedup import (
-        shingle_hash_relation,
-    )
     from tests.conftest import SF_SMOKE
 
     got = _rows(shingle_hash_relation(adv_df, "text", "doc_id"))
-    want = _rows(
-        shingle_hash_relation(adv_df, "text", "doc_id", impl="jvm")
-    )
+    want = _rows(twins.shingle_hash_relation_expr(adv_df, "text", "doc_id"))
     assert got == want
     assert len(want) > 0
 
@@ -116,17 +96,16 @@ def test_shingle_relation_pandas_equals_jvm(adv_df, spark):
     for n in (2, 3, 5):
         got = _rows(shingle_hash_relation(docs, "text", "doc_id", n=n))
         want = _rows(
-            shingle_hash_relation(docs, "text", "doc_id", n=n, impl="jvm")
+            twins.shingle_hash_relation_expr(docs, "text", "doc_id", n=n)
         )
         assert got == want
 
 
 def test_simhash_relation_pandas_equals_jvm(adv_df, spark):
-    from baseline_magician_spark.operators.dedup import simhash_relation
     from tests.conftest import SF_SMOKE
 
     got = _rows(simhash_relation(adv_df, "text", "doc_id"))
-    want = _rows(simhash_relation(adv_df, "text", "doc_id", impl="jvm"))
+    want = _rows(twins.simhash_relation_expr(adv_df, "text", "doc_id"))
     assert got == want
     # degenerate rows really exercised: a NULL text and a no-token doc
     by_id = {r[0]: r[1] for r in got}
@@ -137,6 +116,6 @@ def test_simhash_relation_pandas_equals_jvm(adv_df, spark):
     for bits in (30, 20):
         got = _rows(simhash_relation(docs, "text", "doc_id", bits=bits))
         want = _rows(
-            simhash_relation(docs, "text", "doc_id", bits=bits, impl="jvm")
+            twins.simhash_relation_expr(docs, "text", "doc_id", bits=bits)
         )
         assert got == want

@@ -1,7 +1,10 @@
-"""The numpy ANN kernels must be row-identical to the JVM expression
-renderings (the oracle-replayable paths): same left-to-right fold
-order, same Double.compare tie/NaN ordering for every argmax/argmin/
-sort, same rounding (rounding stays JVM-side in all callers)."""
+"""The ANN operators' numpy kernels must be row-identical to the
+expression renderings in tests/expr_twins.py (the oracle-replayable
+spellings): same left-to-right fold order, same Double.compare
+tie/NaN ordering for every argmax/argmin/sort, same rounding
+(rounding stays JVM-side in all callers). ``brute_force_topk`` runs
+the cosine expression itself, so its pin runs the other way: against
+the numpy pairwise cosine kernel of an exhaustive IVF probe."""
 
 from __future__ import annotations
 
@@ -21,6 +24,7 @@ from baseline_magician_spark.operators.similarity import (
     pq_encode,
     semantic_keep_best,
 )
+from tests import expr_twins as twins
 
 DIM = 8
 
@@ -37,10 +41,10 @@ def _mkvec(seed: int) -> list[float]:
 def emb(spark):
     rows = [(i, _mkvec(i)) for i in range(64)]
     # exact duplicates (cosine ties) and a negated duplicate (cosine
-    # -1 ties). NO zero vector: the jvm expression path itself throws
-    # ANSI DIVIDE_BY_ZERO on a zero-norm row (double division by zero
-    # is an error under ANSI mode), so zero vectors are out of
-    # contract for the cosine operators on BOTH impls.
+    # -1 ties). NO zero vector: the expression rendering itself
+    # throws ANSI DIVIDE_BY_ZERO on a zero-norm row (double division
+    # by zero is an error under ANSI mode), so zero vectors are out of
+    # contract for the cosine operators.
     rows.append((64, rows[10][1]))
     rows.append((66, [-x for x in rows[12][1]]))
     df = spark.createDataFrame(rows, "vec_id long, v array<float>")
@@ -72,80 +76,75 @@ def _rows(df):
     )
 
 
-def _pin(pandas_df, jvm_df):
-    got, want = _rows(pandas_df), _rows(jvm_df)
+def _pin(runtime_df, twin_df):
+    got, want = _rows(runtime_df), _rows(twin_df)
     assert got == want
     assert len(want) > 0
 
 
-def test_brute_force_topk(emb):
+def test_brute_force_topk(emb, cents):
+    # probing every cell makes IVF exhaustive: same pairs, same ranks
     q = emb.where(F.col("vec_id") < 4)
     _pin(
-        brute_force_topk(emb, q, k=5, impl="pandas"),
-        brute_force_topk(emb, q, k=5, impl="jvm"),
+        brute_force_topk(emb, q, k=5),
+        ivf_topk(emb, k=5, n_query_vecs=4, n_probe=len(cents),
+                 centroids=cents),
     )
 
 
 def test_ivf_topk(emb, cents):
     _pin(
-        ivf_topk(emb, k=5, n_query_vecs=3, n_probe=2, centroids=cents,
-                 impl="pandas"),
-        ivf_topk(emb, k=5, n_query_vecs=3, n_probe=2, centroids=cents,
-                 impl="jvm"),
+        ivf_topk(emb, k=5, n_query_vecs=3, n_probe=2, centroids=cents),
+        twins.ivf_topk_expr(emb, cents, k=5, n_query_vecs=3, n_probe=2),
     )
 
 
 def test_ivf_train_step_flat(emb, cents):
     _pin(
-        ivf_train_step_flat(emb, centroids=cents, impl="pandas"),
-        ivf_train_step_flat(emb, centroids=cents, impl="jvm"),
+        ivf_train_step_flat(emb, centroids=cents),
+        twins.ivf_train_step_flat_expr(emb, cents),
     )
 
 
 def test_pq_encode(emb, books):
     _pin(
-        pq_encode(emb, books, impl="pandas"),
-        pq_encode(emb, books, impl="jvm"),
+        pq_encode(emb, books),
+        twins.pq_encode_expr(emb, books),
     )
 
 
 def test_pq_adc_topk(emb, books):
     _pin(
-        pq_adc_topk(emb, k=5, n_query_vecs=3, codebooks=books,
-                    impl="pandas"),
-        pq_adc_topk(emb, k=5, n_query_vecs=3, codebooks=books,
-                    impl="jvm"),
+        pq_adc_topk(emb, k=5, n_query_vecs=3, codebooks=books),
+        twins.pq_adc_topk_expr(emb, books, k=5, n_query_vecs=3),
     )
 
 
 def test_ivfpq_topk(emb, cents, books):
     _pin(
-        ivfpq_topk(emb, cents, books, k=5, n_query_vecs=3, n_probe=2,
-                   impl="pandas"),
-        ivfpq_topk(emb, cents, books, k=5, n_query_vecs=3, n_probe=2,
-                   impl="jvm"),
+        ivfpq_topk(emb, cents, books, k=5, n_query_vecs=3, n_probe=2),
+        twins.ivfpq_topk_expr(
+            emb, cents, books, k=5, n_query_vecs=3, n_probe=2
+        ),
     )
 
 
 def test_semantic_keep_best(emb, cents):
     _pin(
-        semantic_keep_best(emb, cents, impl="pandas"),
-        semantic_keep_best(emb, cents, impl="jvm"),
+        semantic_keep_best(emb, cents),
+        twins.semantic_keep_best_expr(emb, cents),
     )
 
 
 def test_ivf_cell_report(emb, cents):
-    _pin(
-        ivf_cell_report(emb, cents, impl="pandas"),
-        ivf_cell_report(emb, cents, impl="jvm"),
-    )
+    _pin(ivf_cell_report(emb, cents), twins.ivf_cell_report_expr(emb, cents))
 
 
 def test_cell_report_single_centroid_null_c2(emb, cents):
-    # K = 1: the runner-up cosine is NULL on both paths
+    # K = 1: the runner-up cosine is NULL on both renderings
     _pin(
-        ivf_cell_report(emb, cents[:1], impl="pandas"),
-        ivf_cell_report(emb, cents[:1], impl="jvm"),
+        ivf_cell_report(emb, cents[:1]),
+        twins.ivf_cell_report_expr(emb, cents[:1]),
     )
 
 
@@ -161,13 +160,10 @@ def test_on_real_embeddings(spark):
     )
     books = pq_codebooks_from_seeds(cents, m=4)
     _pin(
-        ivfpq_topk(emb, cents, books, impl="pandas"),
-        ivfpq_topk(emb, cents, books, impl="jvm"),
+        ivfpq_topk(emb, cents, books),
+        twins.ivfpq_topk_expr(emb, cents, books),
     )
-    _pin(
-        ivf_cell_report(emb, cents, impl="pandas"),
-        ivf_cell_report(emb, cents, impl="jvm"),
-    )
+    _pin(ivf_cell_report(emb, cents), twins.ivf_cell_report_expr(emb, cents))
 
 
 def test_dkeys_total_order():
@@ -194,7 +190,6 @@ def test_dkeys_total_order():
 def test_lsh_bucket_relation_equals_expression(emb):
     from baseline_magician_spark.operators.similarity import (
         _lsh_bucket_relation,
-        lsh_bucket,
         norm,
     )
 
@@ -213,25 +208,10 @@ def test_lsh_bucket_relation_equals_expression(emb):
             emb.select(
                 "vec_id",
                 norm(F.col("embedding")).alias("_n"),
-                lsh_bucket(
+                twins.lsh_bucket(
                     F.col("embedding"), 8, center=center
                 ).alias("_bucket"),
             )
         )
         assert got == want
         assert len(want) > 0
-
-
-def test_lsh_bucketed_pairs_pandas_equals_jvm(spark):
-    from tests.conftest import SF_SMOKE
-
-    from baseline_magician_spark.operators.similarity import (
-        lsh_bucketed_pairs,
-    )
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    got = _rows(
-        lsh_bucketed_pairs(emb, threshold=0.3, impl="pandas")
-    )
-    want = _rows(lsh_bucketed_pairs(emb, threshold=0.3, impl="jvm"))
-    assert got == want
