@@ -27,9 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-# Tables small enough to broadcast-join at any scale factor (dimensions).
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
-
 
 # Set-once guard for the per-session SQL confs below and memo for the
 # scan split count load_for_compute probes (optimization round 11,
@@ -160,9 +157,3 @@ def load_for_compute(
     if n_parts < target:
         df = df.repartition(target)
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view (for the SQL API path)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -6,8 +6,6 @@ whole-stage codegen) — no Python UDFs in the hot path.
 """
 
 from .ip import (  # noqa: F401
-    cidr_address_count,
-    cidr_to_range,
     ip4_to_long,
     ip4_to_long_py,
     long_to_ip4,

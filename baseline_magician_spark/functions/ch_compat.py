@@ -1978,9 +1978,6 @@ def _date_name(part, c) -> Column:
     return F.date_format(_as_col(c), fmts[p])
 
 
-_BIT_MASKS = None  # built lazily; F.array of 63 literal powers of two
-
-
 def _bitmask_to_list(c) -> Column:
     masks = F.array(*[F.lit(1 << i).cast("long") for i in range(63)])
     kept = F.filter(masks, lambda m: _as_col(c).bitwiseAND(m) != 0)
@@ -3155,10 +3152,6 @@ from .text_similarity import (  # noqa: E402
     soundex_difference,
     string_jaccard_index,
 )
-
-
-def _chars_r6c(s) -> Column:
-    return F.filter(F.split(_as_col(s), ""), lambda c: c != "")
 
 
 def _unbin(s) -> Column:

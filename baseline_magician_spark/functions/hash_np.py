@@ -60,11 +60,6 @@ def _rotl(x, s: int):
     return (x << s) | (x >> (np.uint64(64) - s))
 
 
-def _rotr(x, s: int):
-    s = np.uint64(s)
-    return (x >> s) | (x << (np.uint64(64) - s))
-
-
 def int_hash64_np(v):
     """CH IntHash64Impl (fmix64 of x ^ salt) — cityHash64's numeric
     per-argument hash (hashing.int_hash64_py)."""
@@ -253,12 +248,6 @@ def murmur3_64_pair_np(p0, p1):
     h1 = h1 + h2
     h2 = h2 + h1
     return h1 ^ h2
-
-
-def _rotl32(x, s: int):
-    # x lives in the low 32 bits of a uint64 array
-    s = np.uint64(s)
-    return ((x << s) | (x >> (np.uint64(32) - s))) & _M32
 
 
 def murmur2_32_np(v, nbytes: int, seed: int = 0):

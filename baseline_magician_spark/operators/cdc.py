@@ -274,14 +274,13 @@ def cdc_duplication_ratio(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_docs: int = 2,
     min_len: int = 8,
     mask_bits: int = MASK_BITS,
     window: int = WINDOW,
 ) -> DataFrame:
     """Per-document duplicate-content ratio: the fraction of a
     document's characters covered by chunks whose fingerprint
-    appears in >= min_docs distinct documents — the DOC-LEVEL gating
+    appears in at least two distinct documents — the DOC-LEVEL gating
     signal CDC exists to produce (drop or down-weight documents that
     are mostly boilerplate shared with the rest of the corpus).
 
@@ -300,46 +299,10 @@ def cdc_duplication_ratio(
     the ``n_chars`` sum — then one groupBy on the document id rolls
     everything up. Two uniform-key shuffles total; no persist, no
     semi-join, no second scan of the corpus. (min != max ⇔
-    countDistinct >= 2; ``min_docs`` other than 2 falls back to the
-    aggregate + semi-join rendering.)"""
+    countDistinct >= 2.)"""
     chunks = cdc_chunks_pandas(
         docs, text_col, id_col, mask_bits=mask_bits, window=window
     )
-    if min_docs != 2:
-        from ..cache_tracker import track
-
-        eligible = track(
-            chunks.where(F.col("chunk_len") >= min_len).persist()
-        )
-        shared = (
-            eligible.groupBy("chunk_fp")
-            .agg(F.countDistinct(id_col).alias("_nd"))
-            .where(F.col("_nd") >= min_docs)
-            .select("chunk_fp")
-        )
-        per_doc = (
-            eligible.join(shared, "chunk_fp", "left_semi")
-            .groupBy(id_col)
-            .agg(
-                F.sum("chunk_len").alias("dup_chars"),
-                F.count(F.lit(1)).alias("n_dup_chunks"),
-            )
-        )
-        base = docs.where(F.length(F.col(text_col)) > 0).select(
-            F.col(id_col),
-            F.length(F.col(text_col)).cast("long").alias("n_chars"),
-        )
-        dup = F.coalesce(F.col("dup_chars"), F.lit(0).cast("long"))
-        return base.join(per_doc, id_col, "left").select(
-            id_col,
-            "n_chars",
-            dup.alias("dup_chars"),
-            F.coalesce(
-                F.col("n_dup_chunks"), F.lit(0).cast("long")
-            ).alias("n_dup_chunks"),
-            F.round(dup / F.col("n_chars"), 6).alias("dup_ratio"),
-        )
-
     from pyspark.sql import Window
 
     w = Window.partitionBy("chunk_fp")

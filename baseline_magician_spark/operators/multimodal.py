@@ -9,7 +9,7 @@ Design (the 100 TB shape):
   explicitly-invoked ``mapInPandas`` stages touch it, in Arrow batches,
   so Python sees columnar ``bytes`` without per-row pickling.
 
-- Decode / feature-extract / resize / frame-sample are ``mapInPandas``
+- Decode / feature-extract / frame-sample are ``mapInPandas``
   stages with declared output schemas. Each is embarrassingly parallel
   per-partition (no shuffle); partitioning by id ranges carries through.
 
@@ -963,33 +963,6 @@ def sample_frames(media: DataFrame, every: int = 4) -> DataFrame:
     return videos.select("doc_id", "payload").mapInPandas(frames, schema=out_schema)
 
 
-def resize_stub(media: DataFrame, new_width: int, new_height: int) -> DataFrame:
-    """Resize metadata transform: rewrites (width, height) and truncates
-    the payload to the new pixel budget — a deterministic stand-in for a
-    real resampler, exercising binary slicing through Arrow."""
-    ensure_shipped(media.sparkSession)
-    out_schema = media.schema
-
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        budget = new_width * new_height
-        for pdf in batches:
-            out = pdf.copy()
-            out["payload"] = [p[:budget] for p in out["payload"]]
-            out["meta"] = [
-                {
-                    **m,
-                    "width": new_width,
-                    "height": new_height,
-                    "byte_len": min(m["byte_len"], budget),
-                    "n_frames": min(m["byte_len"], budget) // FRAME_BYTES,
-                }
-                for m in out["meta"]
-            ]
-            yield out
-
-    return media.mapInPandas(rs, schema=out_schema)
-
-
 AUDIO_WINDOW = FRAME_BYTES  # samples per RMS window
 
 
@@ -1002,7 +975,7 @@ def audio_window_rms(media: DataFrame, window: int = AUDIO_WINDOW) -> DataFrame:
 
     One narrow Arrow stage; per-window sums via ``np.add.reduceat``
     (vectorized segment reduction — no Python per-window loop), same
-    shape as the resize/stripe stages. Trailing partial windows are
+    shape as the frame/stripe stages. Trailing partial windows are
     dropped (standard frame semantics).
     """
     ensure_shipped(media.sparkSession)

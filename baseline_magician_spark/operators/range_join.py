@@ -9,19 +9,17 @@ single pass:
   BroadcastNestedLoopJoin with the range predicate. One scan of the
   fact table regardless of N.
 
-- **bucketed equi-join** (scale path, ``prefix_bits``): at 100 TB with
-  100k+ networks a nested-loop against every row is wasteful. Bucket
-  the IPv4 space by a fixed prefix (default /16 → 65536 buckets):
-  each fact row computes its bucket with one shift (map-side, no
-  shuffle), each network explodes into the buckets it covers (a /20
-  lands in 1 bucket; a /8 spans 256). The join becomes a hash
-  equi-join on bucket id with a residual range filter — shuffle-free
-  when the networks side is still broadcast, and an ordinary shuffled
-  hash join keyed on a uniformly-distributed bucket id when it is not.
+- **bucketed equi-join** (scale path): at 100 TB with 100k+ networks
+  a nested-loop against every row is wasteful. Bucket the IPv4 space
+  by a fixed /16 prefix (65536 buckets): each fact row computes its
+  bucket with one shift (map-side, no shuffle), each network explodes
+  into the buckets it covers (a /20 lands in 1 bucket; a /8 spans
+  256). The join becomes a broadcast hash equi-join on bucket id with
+  a residual range filter — shuffle-free.
 
 Both variants keep the range predicate `ip >= start AND ip <= end`
 exactly as the reference generates it (including its off-by-one upper
-bound — see functions.ip.cidr_to_range).
+bound — see functions.ip.parse_cidr_py).
 """
 
 from __future__ import annotations
@@ -29,25 +27,24 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+PREFIX_BITS = 16  # bucket width of the bucketed join: /16 -> 65536 buckets
+
 
 def broadcast_range_join(
     facts: DataFrame,
     networks: DataFrame,
     ip_col: Column | str = "ip_long",
-    how: str = "inner",
 ) -> DataFrame:
     """facts ⋈ networks ON ip BETWEEN start_long AND end_long (broadcast)."""
     ip = F.col(ip_col) if isinstance(ip_col, str) else ip_col
     cond = (ip >= networks["start_long"]) & (ip <= networks["end_long"])
-    return facts.join(F.broadcast(networks), cond, how)
+    return facts.join(F.broadcast(networks), cond)
 
 
 def bucketed_range_join(
     facts: DataFrame,
     networks: DataFrame,
     ip_col: Column | str = "ip_long",
-    prefix_bits: int = 16,
-    broadcast_networks: bool = True,
 ) -> DataFrame:
     """Equi-join on IP prefix bucket + residual range filter.
 
@@ -55,7 +52,7 @@ def bucketed_range_join(
     exploded; correct for any range, not just CIDR-aligned ones.
     """
     ip = F.col(ip_col) if isinstance(ip_col, str) else ip_col
-    shift = 32 - prefix_bits
+    shift = 32 - PREFIX_BITS
 
     nets = networks.withColumn(
         "_bucket",
@@ -66,11 +63,9 @@ def bucketed_range_join(
             )
         ),
     )
-    if broadcast_networks:
-        nets = F.broadcast(nets)
 
     f = facts.withColumn("_bucket", F.shiftright(ip, shift))
-    joined = f.join(nets, "_bucket").where(
+    joined = f.join(F.broadcast(nets), "_bucket").where(
         (ip >= F.col("start_long")) & (ip <= F.col("end_long"))
     )
     return joined.drop("_bucket")

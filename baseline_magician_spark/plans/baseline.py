@@ -130,14 +130,9 @@ def baseline_aggregate(
     aggs = [F.count(F.lit(1)).alias("samples")] + [
         F.floor(agg_fn(c)).cast("long").alias(c) for c in metric_cols
     ]
-    return (
-        joined.groupBy("network")
-        .agg(*aggs)
-        # empty-slice filter (main.go:331-334); with an inner join,
-        # zero-sample groups never appear, but keep the guard explicit
-        # for outer-join callers.
-        .where(F.col("samples") > 0)
-    )
+    # the inner join drops networks with no samples, the reference's
+    # empty-slice filter (main.go:331-334)
+    return joined.groupBy("network").agg(*aggs)
 
 
 @dataclass(frozen=True)

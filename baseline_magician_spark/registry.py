@@ -15,7 +15,10 @@ Contract reminders (driver compare):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import re
+from collections.abc import Callable, Iterable
+from pathlib import Path
 from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,79 +43,33 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 _loaded = False
+_order: list[str] | None = None
 
-# The external correctness harness checks a bounded prefix of the
-# registration order (50 names per round). Names listed here surface
-# first so queries that still need a hard signal — never-checked
-# families, freshly-fixed rows, and operators added this round — land
-# inside the checked window; everything else follows in registration
-# order. Rotate per round.
-# Round-13 window. Rule: earliest deadline first over the
-# CORRECTNESS_r*.json history — every name whose latest recorded
-# check is at or past the capacity-derived lag bound (ceil(N/50) rounds,
-# tests/test_rotation_staleness.py) comes first, the most overdue
-# first and alphabetical within a round; the remaining slots go to
-# the most overdue rows whose code changed since their last check.
-# CAPACITY POLICY (round 10): the bound is DERIVED from the live
-# registry — growing it accepts a slower re-check cadence
-# automatically, with a deliberate hard ceiling of 8 windows (400
-# queries) gated in tests/test_rotation_staleness.py (full policy
-# rationale lives there, next to the arithmetic).
-_PRIORITY: tuple[str, ...] = (
-    # all 49 names last checked in r7 (lag 5 at r12 = the bound)
-    "ch_sql_agg_combinators",
-    "ch_sql_array_join_tokens",
-    "ch_sql_array_lambdas",
-    "ch_sql_asof_attribution",
-    "ch_sql_base58_roundtrip",
-    "ch_sql_calendar_bridges",
-    "ch_sql_categorical_iv",
-    "ch_sql_distinct_prewhere",
-    "ch_sql_extremes",
-    "ch_sql_geo_functions",
-    "ch_sql_group_cube",
-    "ch_sql_group_rollup",
-    "ch_sql_grouping_sets",
-    "ch_sql_join_dims",
-    "ch_sql_join_using",
-    "ch_sql_limit_by",
-    "ch_sql_lttb_downsample",
-    "ch_sql_map_functions",
-    "ch_sql_parametric_if",
-    "ch_sql_parametric_quantiles",
-    "ch_sql_round6_functions",
-    "ch_sql_round6d_functions",
-    "ch_sql_round6f_aggregates",
-    "ch_sql_round6h_aggregates",
-    "ch_sql_round7_functions",
-    "ch_sql_round7b_functions",
-    "ch_sql_round7c_functions",
-    "ch_sql_round7d_functions",
-    "ch_sql_round7e_aggregates",
-    "ch_sql_round7f_functions",
-    "ch_sql_sample_read",
-    "ch_sql_sequence_next_node",
-    "ch_sql_series_period_fft",
-    "ch_sql_summap_by_group",
-    "ch_sql_topk",
-    "ch_sql_tpch_q1",
-    "ch_sql_union_all",
-    "ch_sql_window_topn",
-    "ch_sql_with_fill",
-    "dedup_minhash_lsh_pairs",
-    "dedup_ngram_jaccard_pairs",
-    "multimodal_decode_stats",
-    "pipeline_leakage_safe_split",
-    "q12_late_shipment_priority",
-    "similarity_int8_topk",
-    "similarity_topk_cosine",
-    "text_bigram_lm_scores",
-    "text_gopher_quality",
-    "text_token_entropy",
-    # the most overdue (r8) of the 25 rows whose dedup / similarity /
-    # CDC operators lost their expression branch in round 13
-    "dedup_semantic_keep_best",
-)
+# The external correctness harness checks a bounded prefix of the order
+# get_queries() returns (50 names per round; the harness picks the
+# size). The order is derived, not kept by hand: registered names sort
+# stably by the round of their latest check in the
+# CORRECTNESS_r<round>.json records at the repo root. Never-checked
+# names come first, then the oldest checks; registration order breaks
+# ties. Recording a round therefore rotates the window by itself. With
+# no records (the package imported from the shipped zip) the order is
+# registration order. The records are read once, on the first call.
+_RECORD = re.compile(r"CORRECTNESS_r(\d+)\.json")
+
+
+def _last_checked_rounds(root: Path) -> dict[str, int]:
+    """{query name: newest round whose correctness record in ``root``
+    lists it}; empty when ``root`` is not a directory (a zip)."""
+    latest: dict[str, int] = {}
+    if not root.is_dir():
+        return latest
+    for p in root.glob("CORRECTNESS_r*.json"):
+        m = _RECORD.fullmatch(p.name)
+        if m:
+            r = int(m.group(1))
+            for name in json.loads(p.read_text()):
+                latest[name] = max(r, latest.get(name, 0))
+    return latest
 
 
 def _load() -> None:
@@ -142,10 +99,16 @@ def _load() -> None:
     _loaded = True
 
 
+def _check_order(names: Iterable[str], latest: dict[str, int]) -> list[str]:
+    return sorted(names, key=lambda n: latest.get(n, 0))
+
+
 def _ordered(mapping: dict[str, _V]) -> dict[str, _V]:
-    head = {n: mapping[n] for n in _PRIORITY if n in mapping}
-    head.update((n, v) for n, v in mapping.items() if n not in head)
-    return head
+    global _order
+    if _order is None:
+        root = Path(__file__).resolve().parent.parent
+        _order = _check_order(_QUERIES, _last_checked_rounds(root))
+    return {n: mapping[n] for n in _order if n in mapping}
 
 
 def _released(fn: QueryFn) -> QueryFn:

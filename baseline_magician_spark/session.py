@@ -16,24 +16,21 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "baseline_magician_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all cores. Shuffle
-    partitions default to the core count — on a real cluster this would
+    partitions are the core count — on a real cluster this would
     be ~2-3x total executor cores; AQE coalesces down from there.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

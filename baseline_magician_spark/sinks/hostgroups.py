@@ -65,34 +65,23 @@ def hostgroup_rows(df: DataFrame) -> list[dict]:
     Mapping (main.go:324-439): name = mangled network, networks = [the
     original CIDR string], enable_ban always true; the three incoming
     channels land in ban_for_pps/threshold_pps,
-    ban_for_bandwidth/threshold_mbps, ban_for_flows/threshold_flows —
-    a channel contributes only when its threshold is > 0
-    (zero-threshold deactivation, main.go:372-377).
+    ban_for_bandwidth/threshold_mbps, ban_for_flows/threshold_flows.
+    ``apply_thresholds`` emits every pair with flag = threshold > 0
+    (zero-threshold deactivation, main.go:372-377), so both are read
+    as they are.
     """
     out = []
-    cols = set(df.columns)
-
-    def take(row, thr_col: str, ban_col: str) -> tuple[int, bool]:
-        if thr_col not in cols:
-            return 0, False
-        thr = row[thr_col] or 0
-        ban = bool(row[ban_col]) if ban_col in cols else thr > 0
-        return (thr, True) if (ban and thr > 0) else (0, False)
-
     for row in df.collect():
         g = dict(BAN_SETTINGS_DEFAULTS)
         g["name"] = row["hostgroup_name"]
         g["networks"] = [row["network"]]
         g["enable_ban"] = True
-        g["threshold_pps"], g["ban_for_pps"] = take(
-            row, "threshold_pps_incoming", "ban_for_pps_incoming"
-        )
-        g["threshold_mbps"], g["ban_for_bandwidth"] = take(
-            row, "threshold_mbps_incoming", "ban_for_mbps_incoming"
-        )
-        g["threshold_flows"], g["ban_for_flows"] = take(
-            row, "threshold_flows_incoming", "ban_for_flows_incoming"
-        )
+        g["threshold_pps"] = row["threshold_pps_incoming"]
+        g["ban_for_pps"] = row["ban_for_pps_incoming"]
+        g["threshold_mbps"] = row["threshold_mbps_incoming"]
+        g["ban_for_bandwidth"] = row["ban_for_mbps_incoming"]
+        g["threshold_flows"] = row["threshold_flows_incoming"]
+        g["ban_for_flows"] = row["ban_for_flows_incoming"]
         out.append(g)
     return out
 

@@ -28,7 +28,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.ip import ip4_to_long
+from ..operators.range_join import broadcast_range_join
+
 
 def _events_schema(
     spark: SparkSession, sf_dir: str
@@ -143,11 +144,7 @@ def streaming_baseline_aggregate(
     long (the events->host_metrics adapter, queries.baseline_q).
     """
     with_ip = events.withColumn("_ip_long", ip_expr)
-    joined = with_ip.join(
-        F.broadcast(networks),
-        (F.col("_ip_long") >= F.col("start_long"))
-        & (F.col("_ip_long") <= F.col("end_long")),
-    )
+    joined = broadcast_range_join(with_ip, networks, ip_col="_ip_long")
     aggs = [F.count(F.lit(1)).alias("samples")]
     for metric, (etype, scale) in metric_map.items():
         aggs.append(
@@ -208,6 +205,3 @@ def ip_expr_from_user_id(
     """The events->host adapter's deterministic user->ip mapping
     (queries.baseline_q: IP_BASE + (user_id * IP_SPREAD) % 65536)."""
     return F.lit(base) + (F.col("user_id") * F.lit(spread)) % F.lit(mod)
-
-
-_ = ip4_to_long  # re-exported convenience for callers building ip_expr

@@ -1,5 +1,5 @@
 """BPE training/encoding: fold semantics, train determinism, and the
-Column-vs-pandas encoder A/B pin (the CDC pandas≡JVM pattern)."""
+Column encoder pinned against an independent min-rank-fixpoint model."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from baseline_magician_spark.operators.bpe import (
     bpe_encode,
-    bpe_encode_pandas,
     bpe_train,
     bpe_vocab,
     doc_token_counts,
@@ -36,6 +35,20 @@ def _ref_encode(word: str, merges) -> list[str]:
     for _r, a, b, _f in merges:
         syms = _ref_merge(syms, a, b)
     return syms
+
+
+def _fixpoint_encode(word: str, merges) -> list[str]:
+    """Independent reference encoder: the classic min-rank fixpoint.
+    While any adjacent pair has a merge rank, merge every occurrence
+    of the lowest-ranked one."""
+    rank_of = {(a, b): r for r, a, b, _f in merges}
+    syms = list(word)
+    while True:
+        ranked = [(rank_of[p], p) for p in zip(syms, syms[1:]) if p in rank_of]
+        if not ranked:
+            return syms
+        _r, (a, b) = min(ranked)
+        syms = _ref_merge(syms, a, b)
 
 
 @pytest.mark.parametrize(
@@ -146,13 +159,8 @@ def test_encode_pandas_equals_column_path(spark):
             "word", bpe_encode(F.col("word"), merges).alias("syms")
         ).collect()
     }
-    pd_path = {
-        r["word"]: r["syms"]
-        for r in bpe_encode_pandas(
-            vocab.select("word"), merges
-        ).collect()
-    }
-    assert jvm == pd_path
+    fixpoint = {w: _fixpoint_encode(w, merges) for w in jvm}
+    assert jvm == fixpoint
 
 
 def test_encode_pandas_min_rank_fixpoint_edge(spark):
@@ -169,11 +177,8 @@ def test_encode_pandas_min_rank_fixpoint_edge(spark):
             "word", bpe_encode(F.col("word"), merges).alias("syms")
         ).collect()
     }
-    pd_path = {
-        r["word"]: r["syms"]
-        for r in bpe_encode_pandas(words, merges).collect()
-    }
-    assert jvm == pd_path
+    fixpoint = {w: _fixpoint_encode(w, merges) for w in jvm}
+    assert jvm == fixpoint
     # rank 2 (er+t) outranks rank 3 (er+er): e r e r t -> [er, er, t]
     # -> [er, ert]; the rank-3 merge then finds no (er, er) adjacency
     assert jvm["erert"] == ["er", "ert"]

@@ -1,5 +1,5 @@
 """Multimodal plumbing tests not covered by the oracle gate:
-attach/resize schema + payload slicing, the real-decode stub seam,
+attach schema + payload bytes, the real-decode stub seam,
 and frame fan-out shape."""
 
 from __future__ import annotations
@@ -30,15 +30,6 @@ def test_attach_schema_and_payload(media):
     assert isinstance(row.payload, bytearray | bytes)
     assert bytes(row.payload) == _payload_bytes(7)
     assert row.meta.media_type == "audio"  # 7 % 3 == 1
-
-
-def test_resize_truncates_payload(media):
-    from baseline_magician_spark.operators.multimodal import resize_stub
-
-    out = resize_stub(media, new_width=4, new_height=8).where("doc_id = 7").first()
-    assert out.meta.width == 4 and out.meta.height == 8
-    assert len(out.payload) == 32
-    assert out.meta.n_frames == 2  # 32 // FRAME_BYTES
 
 
 def test_decode_real_rejects_unknown_container(media):

@@ -1,41 +1,72 @@
-"""Registry invariants: the priority window resolves and every query
-has matching oracle column expectations handled by the parity suite."""
+"""Registry invariants: the query order is derived from the recorded
+correctness rounds, and every query has an oracle for the parity
+suite."""
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
 
-def test_priority_names_all_registered():
-    from baseline_magician_spark.registry import _PRIORITY, get_queries
-
-    names = set(get_queries())
-    missing = [n for n in _PRIORITY if n not in names]
-    assert not missing, f"_PRIORITY names not registered: {missing}"
+REPO = Path(__file__).resolve().parent.parent
 
 
-def test_priority_fits_checked_window():
-    """The external harness checks only the first 50 registered names;
-    every _PRIORITY entry must land inside that window or it is a
-    regression guard that never actually runs (round-2 advice)."""
-    from baseline_magician_spark.registry import _PRIORITY
-
-    assert len(_PRIORITY) <= 50, (
-        f"_PRIORITY has {len(_PRIORITY)} names; the harness checks 50"
-    )
-    assert len(set(_PRIORITY)) == len(_PRIORITY), "duplicate names"
-
-
-def test_priority_orders_prefix():
+def test_order_follows_last_checked_round():
+    """The correctness harness checks a prefix of this order, so it
+    must run from never-checked and oldest-checked names to the
+    freshest."""
     from baseline_magician_spark.registry import (
-        _PRIORITY,
-        get_oracles,
+        _last_checked_rounds,
         get_queries,
     )
 
+    latest = _last_checked_rounds(REPO)
+    rounds = [latest.get(n, 0) for n in get_queries()]
+    assert rounds == sorted(rounds)
+
+
+def test_queries_and_oracles_share_one_order():
+    from baseline_magician_spark.registry import get_oracles, get_queries
+
     q = list(get_queries())
-    assert q[: len(_PRIORITY)] == list(_PRIORITY)
     # queries and oracles must present the SAME order to the driver
     o = list(get_oracles())
     assert [n for n in q if n in set(o)] == o
+
+
+def _record(root, rnd: int, names) -> None:
+    row = {"rows_match": True, "schema_match": True, "hash_match": True}
+    (root / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+        json.dumps({n: row for n in names})
+    )
+
+
+def test_never_checked_first_then_oldest_ties_keep_registration(tmp_path):
+    from baseline_magician_spark.registry import (
+        _check_order,
+        _last_checked_rounds,
+    )
+
+    _record(tmp_path, 1, ["a", "b", "c", "d"])
+    _record(tmp_path, 2, ["a", "d"])
+    (tmp_path / "CORRECTNESS_notes.json").write_text("not a record")
+    latest = _last_checked_rounds(tmp_path)
+    assert latest == {"a": 2, "b": 1, "c": 1, "d": 2}
+    assert _check_order(["d", "c", "e", "a", "b", "f"], latest) == [
+        "e", "f", "c", "b", "d", "a",
+    ]
+
+
+def test_no_records_keeps_registration_order(tmp_path):
+    from baseline_magician_spark.registry import (
+        _check_order,
+        _last_checked_rounds,
+    )
+
+    names = ["z", "a", "m"]
+    assert _last_checked_rounds(tmp_path) == {}
+    # a package imported from a zip has no directory at its root
+    assert _last_checked_rounds(tmp_path / "pkg.zip") == {}
+    assert _check_order(names, {}) == names
 
 
 def test_every_query_has_oracle_or_documented_exemption():

@@ -6,15 +6,17 @@ rotation. This test makes staleness a GATED property instead of a
 judge's grep: it fails when any registered query's latest driver
 correctness row is more than 4 rounds older than the newest
 CORRECTNESS_r*.json *and* the name is absent from the current
-``_PRIORITY`` window (i.e. it would fall another round behind), or
-when a registered name has never been driver-checked at all and is
-not in the window.
+window, the first 50 names of ``get_queries()`` (i.e. it would fall
+another round behind), or when a registered name has never been
+checked at all and is not in the window. The records are read
+by the registry's own helper, so the rotation policy lives in one
+module.
 """
 
 from __future__ import annotations
 
 import json
-import re
+import shutil
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -52,8 +54,6 @@ def _max_lag_rounds() -> int:
     return math.ceil(len(get_queries()) / WINDOW_SLOTS)
 
 
-
-
 def test_window_capacity_feasible():
     """The derived lag bound self-adjusts with registry growth; this
     gates only the deliberate readability ceiling (see the policy
@@ -70,36 +70,25 @@ def test_window_capacity_feasible():
     )
 
 
-def _correctness_rounds() -> dict[int, dict]:
-    out = {}
-    for p in REPO.glob("CORRECTNESS_r*.json"):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name)
-        if m:
-            out[int(m.group(1))] = json.loads(p.read_text())
-    return out
-
-
 def test_no_query_falls_behind_the_rotation():
-    from baseline_magician_spark.registry import _PRIORITY, get_queries
+    from baseline_magician_spark.registry import (
+        _last_checked_rounds,
+        get_queries,
+    )
 
-    rounds = _correctness_rounds()
-    assert rounds, "no CORRECTNESS_r*.json found"
-    current = max(rounds)
+    latest = _last_checked_rounds(REPO)
+    assert latest, "no CORRECTNESS_r*.json found"
+    current = max(latest.values())
 
-    latest: dict[str, int] = {}
-    for r in sorted(rounds):
-        for name in rounds[r]:
-            latest[name] = r
-
-    window = set(_PRIORITY)
     registered = list(get_queries())
+    window = set(registered[:WINDOW_SLOTS])
 
     never_checked = [
         n for n in registered if n not in latest and n not in window
     ]
     assert not never_checked, (
         "registered but never driver-checked and not in the current "
-        f"_PRIORITY window: {never_checked}"
+        f"window: {never_checked}"
     )
 
     # a name registered THIS session (after the newest correctness
@@ -116,5 +105,33 @@ def test_no_query_falls_behind_the_rotation():
     )
     assert not too_stale, (
         f"driver rows older than {bound} rounds and not in "
-        f"the _PRIORITY window (will fall further behind): {too_stale}"
+        f"the window (will fall further behind): {too_stale}"
     )
+
+
+def test_recording_a_round_rotates_the_window(tmp_path):
+    """Recording the current window as checked moves it behind every
+    other name and leaves no name at the lag bound outside the next
+    window: the rotation needs no edit to the registry."""
+    from baseline_magician_spark.registry import (
+        _check_order,
+        _last_checked_rounds,
+        get_queries,
+    )
+
+    for p in REPO.glob("CORRECTNESS_r*.json"):
+        shutil.copy(p, tmp_path / p.name)
+    registered = list(get_queries())
+    before = _check_order(registered, _last_checked_rounds(tmp_path))
+    assert before == registered
+
+    current = max(_last_checked_rounds(tmp_path).values()) + 1
+    (tmp_path / f"CORRECTNESS_r{current:02d}.json").write_text(
+        json.dumps({n: {"rows_match": True} for n in before[:WINDOW_SLOTS]})
+    )
+    latest = _last_checked_rounds(tmp_path)
+    after = _check_order(registered, latest)
+    assert after == before[WINDOW_SLOTS:] + before[:WINDOW_SLOTS]
+
+    due = {n for n in registered if current - latest[n] >= _max_lag_rounds()}
+    assert due <= set(after[:WINDOW_SLOTS])
