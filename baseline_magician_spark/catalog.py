@@ -74,19 +74,19 @@ def _patch_pyspark_driver_overheads() -> None:
         if orig is not None and not getattr(orig, "_bms_cached", False):
             per_sc: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
-            def _cached(name, sc, _orig=orig, _per_sc=per_sc):
+            def _cached(name, sc):
                 try:
-                    fns = _per_sc.get(sc)
+                    fns = per_sc.get(sc)
                     if fns is None:
                         fns = {}
-                        _per_sc[sc] = fns
+                        per_sc[sc] = fns
                     fn = fns.get(name)
                     if fn is None:
-                        fn = _orig(name, sc)
+                        fn = orig(name, sc)
                         fns[name] = fn
                     return fn
                 except TypeError:  # un-weakref-able sc: no caching
-                    return _orig(name, sc)
+                    return orig(name, sc)
 
             _cached._bms_cached = True
             _b._get_jvm_function = _cached

@@ -98,13 +98,13 @@ def _rebase_step(acc: Column, unit: Column, mul: int, base: int) -> Column:
     )
 
 
-def _leading(vals: Column, zero_digit: int = 0) -> Column:
-    """Count of leading elements equal to ``zero_digit``.
+def _leading(vals: Column) -> Column:
+    """Count of leading zero elements.
 
     array_position returns 0 (not NULL) when no element matches —
     e.g. an all-zero input — so it must be nullif'd before the -1,
     or the coalesce never falls back to size(vals)."""
-    flags = F.transform(vals, lambda v: v != zero_digit)
+    flags = F.transform(vals, lambda v: v != 0)
     return F.coalesce(
         F.nullif(F.array_position(flags, True), F.lit(0)).cast("int") - 1,
         F.size(vals),

@@ -1935,9 +1935,9 @@ CH_FUNCTIONS["arrayReduce"] = _array_reduce
 # ---------------------------------------------------------------------------
 # Round-6 function tranche: the remaining everyday CH names surfaced by
 # a coverage sweep against the public function reference. All pure
-# Column expressions. Hash-name mappings that are NOT byte-compatible
-# with CH's algorithm (sipHash64/cityHash64/farmHash64 -> seeded
-# xxhash64) are for bucketing/fingerprint use and documented as such.
+# Column expressions. The hash names are byte-exact or canonical except
+# farmHash64 and wyHash64, seeded-xxhash64 bucketing stand-ins marked
+# at their definitions (README hash table).
 # ---------------------------------------------------------------------------
 
 

@@ -134,9 +134,9 @@ class Murmur128U64Emitter(Murmur128Emitter):
 
 
 class Murmur128PairEmitter(_PairMixin, Murmur128Emitter):
-    def __init__(self, prefix: str, w1: str, w2: str, width: int = 8):
+    def __init__(self, prefix: str, w1: str, w2: str):
         super().__init__(prefix)
-        self._bind_pair(w1, w2, width)
+        self._bind_pair(w1, w2, 8)
 
     def f_le(self, e: str, pos: str, nbytes: int) -> str:
         return self._pf(pos)

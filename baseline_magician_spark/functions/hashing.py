@@ -33,23 +33,23 @@ def _codes(c: Column) -> Column:
     return F.transform(chars, lambda ch: F.ascii(ch).cast("long"))
 
 
-def poly_hash(col: Column | str, seed: int = POLY_SEED, mod: int = POLY_MOD) -> Column:
+def poly_hash(col: Column | str, seed: int = POLY_SEED) -> Column:
     """Polynomial rolling hash of a string column (deterministic, cross-engine)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.aggregate(
         _codes(c),
         F.lit(seed).cast("long"),
-        lambda acc, x: (acc * POLY_BASE + x) % mod,
+        lambda acc, x: (acc * POLY_BASE + x) % POLY_MOD,
     )
 
 
-def poly_hash_duckdb(expr: str, seed: int = POLY_SEED, mod: int = POLY_MOD) -> str:
-    """The exact same hash as `poly_hash`, as DuckDB SQL text (for oracles)."""
+def poly_hash_duckdb(expr: str) -> str:
+    """`poly_hash` at its default seed, as DuckDB SQL text (for oracles)."""
     return (
-        f"list_reduce(list_prepend(CAST({seed} AS BIGINT), "
+        f"list_reduce(list_prepend(CAST({POLY_SEED} AS BIGINT), "
         f"list_transform(list_filter(string_split({expr}, ''), c -> c <> ''), "
         f"c -> CAST(ascii(c) AS BIGINT))), "
-        f"(a, b) -> (a * {POLY_BASE} + b) % {mod})"
+        f"(a, b) -> (a * {POLY_BASE} + b) % {POLY_MOD})"
     )
 
 

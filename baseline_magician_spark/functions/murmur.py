@@ -92,9 +92,9 @@ def _rotl32_py(x: int, r: int) -> int:
     return ((x << r) | (x >> (32 - r))) & _M32
 
 
-def murmur3_32_py(data: bytes, seed: int = 0) -> int:
+def murmur3_32_py(data: bytes) -> int:
     n = len(data)
-    h = seed
+    h = 0
     for off in range(0, n - n % 4, 4):
         k = int.from_bytes(data[off : off + 4], "little")
         k = (k * C1) & _M32

@@ -53,9 +53,9 @@ def _fmix_py(k: int) -> int:
     return k
 
 
-def murmur3_128_py(data: bytes, seed: int = 0) -> tuple[int, int]:
+def murmur3_128_py(data: bytes) -> tuple[int, int]:
     n = len(data)
-    h1 = h2 = seed
+    h1 = h2 = 0
     for i in range(n // 16):
         k1 = int.from_bytes(data[16 * i : 16 * i + 8], "little")
         k2 = int.from_bytes(data[16 * i + 8 : 16 * i + 16], "little")
@@ -84,8 +84,8 @@ def murmur3_128_py(data: bytes, seed: int = 0) -> tuple[int, int]:
     return h1, h2
 
 
-def murmur3_64_py(data: bytes, seed: int = 0) -> int:
-    h1, h2 = murmur3_128_py(data, seed)
+def murmur3_64_py(data: bytes) -> int:
+    h1, h2 = murmur3_128_py(data)
     return h1 ^ h2
 
 
@@ -117,7 +117,7 @@ def _mix2(k: Column) -> Column:
     return _rotl64(k * F.lit(_sl(C2)), 33) * F.lit(_sl(C1))
 
 
-def murmur3_128_struct(col, seed: int = 0) -> Column:
+def murmur3_128_struct(col) -> Column:
     """MurmurHash3_x64_128 as a struct<h1:bigint, h2:bigint> Column
     (each half the UInt64's signed-long bit pattern; NULL in -> NULL
     out). Analyze under wrap_arith."""
@@ -132,8 +132,8 @@ def murmur3_128_struct(col, seed: int = 0) -> Column:
         nn = F.length(b).cast("long")
         nblocks = F.floor(nn / F.lit(16)).cast("int")
         s0 = F.struct(
-            F.lit(_sl(seed & _M64)).cast("long").alias("h1"),
-            F.lit(_sl(seed & _M64)).cast("long").alias("h2"),
+            F.lit(0).cast("long").alias("h1"),
+            F.lit(0).cast("long").alias("h2"),
         )
 
         def step(acc: Column, wi: Column) -> Column:
@@ -212,16 +212,16 @@ def murmur3_128_struct(col, seed: int = 0) -> Column:
     return F.when(c.isNotNull(), _let1(c.cast("binary"), build))
 
 
-def murmur3_64(col, seed: int = 0) -> Column:
+def murmur3_64(col) -> Column:
     """CH murmurHash3_64: XOR of the two x64_128 halves
     (FunctionsHashing.h MurmurHash3Impl64)."""
     return _let1(
-        murmur3_128_struct(col, seed),
+        murmur3_128_struct(col),
         lambda s: s["h1"].bitwiseXOR(s["h2"]),
     )
 
 
-def murmur3_128_hex(col, seed: int = 0) -> Column:
+def murmur3_128_hex(col) -> Column:
     """CH murmurHash3_128's FixedString(16) result rendered as 32
     uppercase hex chars of the output BYTE stream (h1 LE then h2 LE
     — the order the reference wire format would carry)."""
@@ -232,7 +232,7 @@ def murmur3_128_hex(col, seed: int = 0) -> Column:
         )
 
     return _let1(
-        murmur3_128_struct(col, seed),
+        murmur3_128_struct(col),
         lambda s: F.concat(le16(s["h1"]), le16(s["h2"])),
     )
 
@@ -286,11 +286,9 @@ class Murmur128Emitter:
         k = self.mulc(self.emit(f"xor({k}, {k} // {1 << 33})"), FM2)
         return self.emit(f"xor({k}, {k} // {1 << 33})")
 
-    def chain(
-        self, e: str, n: str, blocks: int, seed: int = 0
-    ) -> tuple[str, str]:
-        h1 = self.emit(f"CAST({seed & _M64} AS HUGEINT)")
-        h2 = self.emit(f"CAST({seed & _M64} AS HUGEINT)")
+    def chain(self, e: str, n: str, blocks: int) -> tuple[str, str]:
+        h1 = self.emit("CAST(0 AS HUGEINT)")
+        h2 = self.emit("CAST(0 AS HUGEINT)")
         for w in range(blocks):
             k1 = self._mix(self.f_le(e, str(16 * w + 1), 8), C1, 31, C2)
             h1 = self.emit(
@@ -325,13 +323,11 @@ class Murmur128Emitter:
         h2 = self.emit(f"({h2} + {h1}) % {_P64}")
         return h1, h2
 
-    def dispatch64(
-        self, e: str, n: str, max_len: int, seed: int = 0
-    ) -> str:
+    def dispatch64(self, e: str, n: str, max_len: int) -> str:
         """murmurHash3_64 (h1 XOR h2), block count CASE-dispatched."""
         arms = []
         for w in range(max_len // 16 + 1):
-            h1, h2 = self.chain(e, n, w, seed)
+            h1, h2 = self.chain(e, n, w)
             x = self.emit(f"xor({h1}, {h2})")
             arms.append(f"WHEN ({n}) // 16 = {w} THEN {x}")
         return self.emit("CASE " + " ".join(arms) + " END")

@@ -46,6 +46,10 @@ Q1, Q2, Q3, Q4, Q5 = (
     374761393,
 )
 
+# Seed-0 stripe accumulators v1..v4: CH hashes at seed 0.
+_V64 = ((P1 + P2) & _M64, P2, 0, -P1 & _M64)
+_V32 = ((Q1 + Q2) & _M32, Q2, 0, -Q1 & _M32)
+
 
 # --------------------------------------------------------------- python
 def _rotl_py(v: int, s: int) -> int:
@@ -105,16 +109,11 @@ def _rotl32_py(v: int, s: int) -> int:
     return ((v << s) | (v >> (32 - s))) & _M32
 
 
-def xxh32_py(data: bytes, seed: int = 0) -> int:
+def xxh32_py(data: bytes) -> int:
     n = len(data)
     i = 0
     if n >= 16:
-        v = [
-            (seed + Q1 + Q2) & _M32,
-            (seed + Q2) & _M32,
-            seed & _M32,
-            (seed - Q1) & _M32,
-        ]
+        v = list(_V32)
         while i + 16 <= n:
             for j in range(4):
                 lane = int.from_bytes(
@@ -129,7 +128,7 @@ def xxh32_py(data: bytes, seed: int = 0) -> int:
             + _rotl32_py(v[3], 18)
         ) & _M32
     else:
-        h = (seed + Q5) & _M32
+        h = Q5
     h = (h + n) & _M32
     while i + 4 <= n:
         lane = int.from_bytes(data[i : i + 4], "little")
@@ -178,8 +177,8 @@ class _Lets:
         )
 
 
-def xxh64_sql(input_sql: str, seed: int = 0) -> str:
-    """XXH64(seed) of a string/binary SQL fragment as ONE Spark-SQL
+def xxh64_sql(input_sql: str) -> str:
+    """XXH64 (seed 0) of a string/binary SQL fragment as ONE Spark-SQL
     text expression. Analyze under wrap_arith."""
     L = _Lets("xv")
     p1, p2, p3, p4, p5 = (f"{_sl(p)}L" for p in (P1, P2, P3, P4, P5))
@@ -201,10 +200,8 @@ def xxh64_sql(input_sql: str, seed: int = 0) -> str:
         f"'v4',{rnd('xs.v4', _f64le_sql('bb', '(xi*32+25)'))})"
     )
     init = (
-        f"named_struct('v1',{_sl((seed + P1 + P2) & _M64)}L,"
-        f"'v2',{_sl((seed + P2) & _M64)}L,"
-        f"'v3',{_sl(seed & _M64)}L,"
-        f"'v4',{_sl((seed - P1) & _M64)}L)"
+        f"named_struct('v1',{_sl(_V64[0])}L,'v2',{_sl(_V64[1])}L,"
+        f"'v3',0L,'v4',{_sl(_V64[3])}L)"
     )
 
     def merged(sv: str) -> str:
@@ -229,7 +226,7 @@ def xxh64_sql(input_sql: str, seed: int = 0) -> str:
         f"{init},(xs,xi)->{stripe_body}) ELSE {init} END",
         lambda sv: L.let(
             f"(CASE WHEN nb>=32 THEN {merged(sv)} ELSE "
-            f"{_sl((seed + P5) & _M64)}L END)+nb",
+            f"{_sl(P5)}L END)+nb",
             lambda h0: _tail64(L, h0, p1, p2, p3, p4, p5),
         ),
     )
@@ -312,8 +309,8 @@ def _rnd_text(L: _Lets, lane: str, p1: str, p2: str) -> str:
     )
 
 
-def xxh32_sql(input_sql: str, seed: int = 0) -> str:
-    """XXH32(seed) as ONE Spark-SQL text expression (UInt32 as a
+def xxh32_sql(input_sql: str) -> str:
+    """XXH32 (seed 0) as ONE Spark-SQL text expression (UInt32 as a
     non-negative BIGINT). Analyze under wrap_arith."""
     L = _Lets("xw")
     m32 = str(_M32)
@@ -338,9 +335,8 @@ def xxh32_sql(input_sql: str, seed: int = 0) -> str:
         f"'v3',{lane_step('v3', 2)},'v4',{lane_step('v4', 3)})"
     )
     init = (
-        f"named_struct('v1',{(seed + Q1 + Q2) & _M32}L,"
-        f"'v2',{(seed + Q2) & _M32}L,'v3',{seed & _M32}L,"
-        f"'v4',{(seed - Q1) & _M32}L)"
+        f"named_struct('v1',{_V32[0]}L,'v2',{_V32[1]}L,'v3',0L,"
+        f"'v4',{_V32[3]}L)"
     )
     conv = (
         f"((((shiftleft(sv.v1,1)|shiftrightunsigned(sv.v1,31))&{m32})"
@@ -354,7 +350,7 @@ def xxh32_sql(input_sql: str, seed: int = 0) -> str:
         f"CASE WHEN {stripes}>0 THEN aggregate(sequence(0,{stripes}-1),"
         f"{init},(xs,xi)->{stripe_body}) ELSE {init} END),"
         f"sv->((CASE WHEN nb>=16 THEN {conv} ELSE "
-        f"{(seed + Q5) & _M32}L END)+nb)&{m32}),1)"
+        f"{Q5}L END)+nb)&{m32}),1)"
     )
     out = h0
     # up to three 4-byte chunks at base = nb - nb%16
@@ -426,7 +422,7 @@ def _rotl64_col(x: Column, r: int) -> Column:
     )
 
 
-def xxh64(col, seed: int = 0) -> Column:
+def xxh64(col) -> Column:
     """Column-builder rendering (fallback). Analyze under
     wrap_arith."""
     c = col if isinstance(col, Column) else F.col(col)
@@ -440,10 +436,10 @@ def xxh64(col, seed: int = 0) -> Column:
         nn = F.length(b).cast("long")
         stripes = F.floor(nn / F.lit(32)).cast("int")
         init = F.struct(
-            F.lit(_sl((seed + P1 + P2) & _M64)).cast("long").alias("v1"),
-            F.lit(_sl((seed + P2) & _M64)).cast("long").alias("v2"),
-            F.lit(_sl(seed & _M64)).cast("long").alias("v3"),
-            F.lit(_sl((seed - P1) & _M64)).cast("long").alias("v4"),
+            *(
+                F.lit(_sl(v)).cast("long").alias(f"v{j + 1}")
+                for j, v in enumerate(_V64)
+            )
         )
 
         def stripe(st: Column, i: Column) -> Column:
@@ -487,7 +483,7 @@ def xxh64(col, seed: int = 0) -> Column:
         h = _let1(
             folded,
             lambda sv: F.when(nn >= 32, merged(sv)).otherwise(
-                F.lit(_sl((seed + P5) & _M64)).cast("long")
+                F.lit(_sl(P5)).cast("long")
             )
             + nn,
         )
@@ -552,7 +548,7 @@ def xxh64(col, seed: int = 0) -> Column:
     return F.when(c.isNotNull(), _let1(c.cast("binary"), build))
 
 
-def xxh32(col, seed: int = 0) -> Column:
+def xxh32(col) -> Column:
     """Column-builder rendering (fallback). Analyze under
     wrap_arith. All 32-bit wraps are &-masks — Spark's % keeps the
     dividend's sign, so a wrap-negative product % 2^32 would stay
@@ -577,10 +573,10 @@ def xxh32(col, seed: int = 0) -> Column:
         nn = F.length(b).cast("long")
         stripes = F.floor(nn / F.lit(16)).cast("int")
         init = F.struct(
-            F.lit((seed + Q1 + Q2) & _M32).cast("long").alias("v1"),
-            F.lit((seed + Q2) & _M32).cast("long").alias("v2"),
-            F.lit(seed & _M32).cast("long").alias("v3"),
-            F.lit((seed - Q1) & _M32).cast("long").alias("v4"),
+            *(
+                F.lit(v).cast("long").alias(f"v{j + 1}")
+                for j, v in enumerate(_V32)
+            )
         )
 
         def lane_mix(v: Column, lane: Column) -> Column:
@@ -611,7 +607,7 @@ def xxh32(col, seed: int = 0) -> Column:
                         + rotl(sv["v3"], 12)
                         + rotl(sv["v4"], 18)
                     ).bitwiseAND(m32),
-                ).otherwise(F.lit((seed + Q5) & _M32).cast("long"))
+                ).otherwise(F.lit(Q5).cast("long"))
                 + nn
             ).bitwiseAND(m32),
         )
@@ -666,30 +662,30 @@ def xxh32(col, seed: int = 0) -> Column:
     return F.when(c.isNotNull(), _let1(c.cast("binary"), build))
 
 
-def xxh64_fast(col, seed: int = 0) -> Column:
+def xxh64_fast(col) -> Column:
     from .cityhash import col_sql
 
     c = col if isinstance(col, Column) else F.col(col)
     inp = col_sql(c)
     if inp is not None:
         try:
-            return F.expr(xxh64_sql(f"({inp})", seed))
+            return F.expr(xxh64_sql(f"({inp})"))
         except Exception:
             pass
-    return xxh64(c, seed)
+    return xxh64(c)
 
 
-def xxh32_fast(col, seed: int = 0) -> Column:
+def xxh32_fast(col) -> Column:
     from .cityhash import col_sql
 
     c = col if isinstance(col, Column) else F.col(col)
     inp = col_sql(c)
     if inp is not None:
         try:
-            return F.expr(xxh32_sql(f"({inp})", seed))
+            return F.expr(xxh32_sql(f"({inp})"))
         except Exception:
             pass
-    return xxh32(c, seed)
+    return xxh32(c)
 
 
 # --------------------------------------------------------------- duckdb
@@ -737,12 +733,11 @@ class XxEmitter:
         )
         return self.mulc64(self.rotl64(t, 31), P1)
 
-    def xxh64_chain(self, e: str, n: str, stripes: int, seed: int = 0) -> str:
+    def xxh64_chain(self, e: str, n: str, stripes: int) -> str:
         if stripes > 0:
-            v1 = self.emit(f"CAST({(seed + P1 + P2) & _M64} AS HUGEINT)")
-            v2 = self.emit(f"CAST({(seed + P2) & _M64} AS HUGEINT)")
-            v3 = self.emit(f"CAST({seed & _M64} AS HUGEINT)")
-            v4 = self.emit(f"CAST({(seed - P1) & _M64} AS HUGEINT)")
+            v1, v2, v3, v4 = (
+                self.emit(f"CAST({v} AS HUGEINT)") for v in _V64
+            )
             for s in range(stripes):
                 v1 = self.rnd(v1, self.f_le(e, str(32 * s + 1), 8))
                 v2 = self.rnd(v2, self.f_le(e, str(32 * s + 9), 8))
@@ -758,7 +753,7 @@ class XxEmitter:
                     f"({self.mulc64(self.emit(f'xor({h}, {z})'), P1)} + {P4}) % {_P64S}"
                 )
         else:
-            h = self.emit(f"CAST({(seed + P5) & _M64} AS HUGEINT)")
+            h = self.emit(f"CAST({P5} AS HUGEINT)")
         h = self.emit(f"({h} + CAST({n} AS HUGEINT)) % {_P64S}")
         base = f"({n}) - (({n}) % 32)"
         for t in range(3):
@@ -790,10 +785,10 @@ class XxEmitter:
         h = self.mulc64(self.emit(f"xor({h}, {h} // {1 << 29})"), P3)
         return self.emit(f"xor({h}, {h} // {1 << 32})")
 
-    def xxh64_dispatch(self, e: str, n: str, max_len: int, seed: int = 0) -> str:
+    def xxh64_dispatch(self, e: str, n: str, max_len: int) -> str:
         arms = []
         for s in range(max_len // 32 + 1):
-            h = self.xxh64_chain(e, n, s, seed)
+            h = self.xxh64_chain(e, n, s)
             arms.append(f"WHEN ({n}) // 32 = {s} THEN {h}")
         return self.emit("CASE " + " ".join(arms) + " END")
 
@@ -803,14 +798,9 @@ class XxEmitter:
             f"(({a} * {1 << r}) % {_P32S} + {a} // {1 << (32 - r)}) % {_P32S}"
         )
 
-    def xxh32_chain(self, e: str, n: str, stripes: int, seed: int = 0) -> str:
+    def xxh32_chain(self, e: str, n: str, stripes: int) -> str:
         if stripes > 0:
-            v = [
-                self.emit(f"CAST({(seed + Q1 + Q2) & _M32} AS HUGEINT)"),
-                self.emit(f"CAST({(seed + Q2) & _M32} AS HUGEINT)"),
-                self.emit(f"CAST({seed & _M32} AS HUGEINT)"),
-                self.emit(f"CAST({(seed - Q1) & _M32} AS HUGEINT)"),
-            ]
+            v = [self.emit(f"CAST({v} AS HUGEINT)") for v in _V32]
             for s in range(stripes):
                 for j in range(4):
                     lane = self.f_le(e, str(16 * s + 4 * j + 1), 4)
@@ -825,7 +815,7 @@ class XxEmitter:
                 f"{self.rotl32(v[2], 12)} + {self.rotl32(v[3], 18)}) % {_P32S}"
             )
         else:
-            h = self.emit(f"CAST({(seed + Q5) & _M32} AS HUGEINT)")
+            h = self.emit(f"CAST({Q5} AS HUGEINT)")
         h = self.emit(f"({h} + CAST({n} AS HUGEINT)) % {_P32S}")
         base = f"({n}) - (({n}) % 16)"
         for t in range(3):
@@ -846,10 +836,10 @@ class XxEmitter:
         h = self.emit(f"(xor({h}, {h} // {1 << 13}) * {Q3}) % {_P32S}")
         return self.emit(f"xor({h}, {h} // {1 << 16})")
 
-    def xxh32_dispatch(self, e: str, n: str, max_len: int, seed: int = 0) -> str:
+    def xxh32_dispatch(self, e: str, n: str, max_len: int) -> str:
         arms = []
         for s in range(max_len // 16 + 1):
-            h = self.xxh32_chain(e, n, s, seed)
+            h = self.xxh32_chain(e, n, s)
             arms.append(f"WHEN ({n}) // 16 = {s} THEN {h}")
         return self.emit("CASE " + " ".join(arms) + " END")
 

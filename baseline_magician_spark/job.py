@@ -11,6 +11,7 @@ distributed pass (see plans.baseline).
 
 from __future__ import annotations
 
+import http.client
 import logging
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -28,7 +29,7 @@ from .sources.networks import (
     fetch_networks_list,
     networks_from_cli,
 )
-from .sources.rest import Transport
+from .sources.rest import RestError, Transport
 
 log = logging.getLogger(__name__)
 
@@ -42,7 +43,11 @@ def resolve_networks(
     (main.go:112-133 — the reference has no config fallback; ours is
     the offline-run extension). The config list is the FALLBACK after
     a failed/unavailable REST fetch, never an override of the live
-    API's network list."""
+    API's network list. A failed fetch is what the fetch path raises
+    when the API refuses or is unreachable: ``RestError``, ``OSError``
+    (``URLError``, timeouts), ``ValueError`` (a body that is not JSON)
+    and ``http.client.HTTPException``; any other exception is a bug
+    and propagates."""
     if cli_networks_list:
         return networks_from_cli(cli_networks_list)
     try:
@@ -53,7 +58,8 @@ def resolve_networks(
         )
         if nets:
             return nets
-    except Exception as exc:  # offline run — fall back to config
+    except (RestError, OSError, ValueError, http.client.HTTPException) as exc:
+        # offline run — fall back to config
         log.warning("networks_list fetch failed (%s); using config list", exc)
     return list(config.networks)
 

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .similarity import (
+    N_PROBE,
+    TOP_K,
     _ivf_assign_relation,
     _ivf_probe_relation,
     _pairwise_score_relation,
@@ -48,16 +50,12 @@ __all__ = [
 def _assigned(
     embeddings: DataFrame,
     centroids: list[tuple[int, list[float]]],
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     # the Arrow-batched numpy assignment ivf_topk uses (guide §4.2),
     # pinned against its expression twin in tests/test_similarity_np.py
     return _ivf_assign_relation(
         embeddings,
         sorted(centroids),
-        id_col,
-        vec_col,
         out_id="id",
         out_vec="vec",
         keep_vec=True,
@@ -68,8 +66,6 @@ def ann_index_write(
     embeddings: DataFrame,
     path: str,
     centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """Materialize the IVF index: centroid metadata + cell-partitioned
     postings. One corpus pass (the map-side assignment is a scan
@@ -88,7 +84,7 @@ def ann_index_write(
     # (and one file) per cell instead of n_input_partitions x K tiny
     # files — the clustering a 100 TB build wants anyway (each cell's
     # postings are co-located and contiguous for the serve scan)
-    _assigned(embeddings, centroids, id_col, vec_col).repartition(
+    _assigned(embeddings, centroids).repartition(
         "cell"
     ).write.partitionBy("cell").mode("overwrite").parquet(
         f"{path}/postings"
@@ -113,32 +109,23 @@ def ann_index_postings(spark: SparkSession, path: str) -> DataFrame:
 def ann_index_add(
     new_embeddings: DataFrame,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """Incremental ingest: assign new vectors under the PERSISTED
     centroids and append their postings — no retrain, no touch of
     existing cell files."""
     spark = new_embeddings.sparkSession
     centroids = ann_index_read_centroids(spark, path)
-    _assigned(new_embeddings, centroids, id_col, vec_col).repartition(
+    _assigned(new_embeddings, centroids).repartition(
         "cell"
     ).write.partitionBy("cell").mode("append").parquet(
         f"{path}/postings"
     )
 
 
-def ivf_serve_persisted(
-    queries: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_probe: int = 4,
-) -> DataFrame:
-    """Serve approximate top-k from the persisted index.
+def ivf_serve_persisted(queries: DataFrame, path: str) -> DataFrame:
+    """Serve approximate top-TOP_K from the persisted index.
 
-    The probed cell set is collected first (|queries| x n_probe ids —
+    The probed cell set is collected first (|queries| x N_PROBE ids —
     serve-time queries are few by definition) and pushed as an isin
     filter on the postings scan, so only the probed cell PARTITIONS
     are read — the explain shows PartitionFilters on ``cell``. The
@@ -148,9 +135,7 @@ def ivf_serve_persisted(
 
     spark = queries.sparkSession
     centroids = ann_index_read_centroids(spark, path)
-    probes = _ivf_probe_relation(
-        queries, centroids, n_probe, id_col, vec_col
-    )
+    probes = _ivf_probe_relation(queries, centroids, N_PROBE)
     probed_cells = sorted(
         {int(r["cell"]) for r in probes.select("cell").distinct().collect()}
     )
@@ -179,5 +164,5 @@ def ivf_serve_persisted(
         F.desc("cosine_sim"), F.asc("neighbor_id")
     )
     return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
+        F.col("rank") <= TOP_K
     )

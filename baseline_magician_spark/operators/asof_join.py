@@ -34,14 +34,13 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     value_cols: list[str],
-    right_order: str | None = None,
-    how: str = "inner",
+    right_order: str,
 ) -> DataFrame:
     """Output: all columns of ``left`` + ``asof_<c>`` for each value
-    column (null when no earlier right row, how='left' only)."""
+    column; inner join, so a left row with no earlier right row is
+    dropped."""
     lcols = left.columns
     rv = F.struct(*[F.col(c).alias(c) for c in value_cols]).alias("_rv")
-    order_in_side = F.col(right_order) if right_order else F.lit(0)
 
     l = left.select(
         *lcols,
@@ -63,7 +62,7 @@ def asof_join(
         ],
         F.col(right_ts).alias("_ts"),
         F.lit(0).alias("_side"),
-        order_in_side.cast("long").alias("_ord"),
+        F.col(right_order).cast("long").alias("_ord"),
         rv,
     )
 
@@ -77,10 +76,9 @@ def asof_join(
         .select(*lcols, "_side", F.last("_rv", ignorenulls=True).over(w).alias("_rv"))
         .where(F.col("_side") == 1)
     )
-    if how == "inner":
-        # match test on the carried STRUCT, not a flattened field — a
-        # matched right row may legitimately hold NULL in any value col
-        carried = carried.where(F.col("_rv").isNotNull())
+    # match test on the carried STRUCT, not a flattened field — a
+    # matched right row may legitimately hold NULL in any value col
+    carried = carried.where(F.col("_rv").isNotNull())
     return carried.select(
         *lcols,
         *[F.col(f"_rv.{c}").alias(f"asof_{c}") for c in value_cols],

@@ -47,13 +47,11 @@ __all__ = [
 ]
 
 
-def bpe_vocab(
-    docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def bpe_vocab(docs: DataFrame) -> DataFrame:
     """The distinct-word relation ``(word, c)`` — the one corpus pass
     everything else in this module runs from."""
     return (
-        docs.select(F.explode(tokens(text_col)).alias("word"))
+        docs.select(F.explode(tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -300,8 +298,6 @@ def word_token_counts(
 def doc_token_counts(
     docs: DataFrame,
     merges: list[tuple[int, str, str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
     word_lens: DataFrame | None = None,
 ) -> DataFrame:
     """Token-EXACT per-document counts ``(id, n_tok_exact)``: encode
@@ -316,13 +312,13 @@ def doc_token_counts(
     just to recover the word list — the lengths must cover every
     corpus word (true for the training state by construction)."""
     toks = docs.select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("word")
+        F.col("doc_id"), F.explode(tokens("text")).alias("word")
     )
     if word_lens is None:
         vocab = toks.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
         word_lens = word_token_counts(vocab, merges)
     return (
         toks.join(F.broadcast(word_lens), "word")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum("n_bpe").cast("long").alias("n_tok_exact"))
     )

@@ -44,6 +44,9 @@ GOLD = 0x9E3779B9  # golden-ratio odd constant; gear table generator
 MOD = 1 << 61
 WINDOW = 32
 MASK_BITS = 6  # boundary iff h % 64 == 0 -> ~64-char expected chunks
+# Shorter chunks are the trivial slivers the 2^MASK_BITS boundary
+# density makes common; they never count as shared content.
+MIN_SHARED_LEN = 8
 
 
 def _pow_mod_np(base: int, n: int, mod: int):
@@ -170,13 +173,7 @@ def _chunk_batch_np(texts, mask_bits: int, window: int, pw, ipw):
     )
 
 
-def cdc_chunks_pandas(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    mask_bits: int = MASK_BITS,
-    window: int = WINDOW,
-) -> DataFrame:
+def cdc_chunks_pandas(docs: DataFrame) -> DataFrame:
     """(id, chunk_ord, chunk_start, chunk_len, chunk_fp) — one row
     per content-defined chunk; chunk_fp is the engine's cross-engine
     polynomial hash of the chunk text. Empty documents produce no
@@ -193,10 +190,10 @@ def cdc_chunks_pandas(
     from ..pyship import ensure_shipped
 
     ensure_shipped(docs.sparkSession)
-    src = docs.where(F.length(F.col(text_col)) > 0).select(
-        F.col(id_col), F.col(text_col).alias("_t")
+    src = docs.where(F.length(F.col("text")) > 0).select(
+        F.col("doc_id"), F.col("text").alias("_t")
     )
-    id_type = docs.schema[id_col].dataType
+    id_type = docs.schema["doc_id"].dataType
 
     def gen(batches):
         import pandas as pd
@@ -211,13 +208,13 @@ def cdc_chunks_pandas(
                 pw = _pow_mod_np(POLY_BASE, maxlen, POLY_MOD)
                 ipw = _pow_mod_np(binv, maxlen, POLY_MOD)
             d_of, ords, starts, lens, fps = _chunk_batch_np(
-                texts, mask_bits, window, pw, ipw
+                texts, MASK_BITS, WINDOW, pw, ipw
             )
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy()[d_of]
+                    "doc_id": pdf["doc_id"].to_numpy()[d_of]
                     if len(d_of)
-                    else pdf[id_col].iloc[:0],
+                    else pdf["doc_id"].iloc[:0],
                     "chunk_ord": ords,
                     "chunk_start": starts,
                     "chunk_len": lens,
@@ -228,7 +225,7 @@ def cdc_chunks_pandas(
     return src.mapInPandas(
         gen,
         schema=StructType(
-            [StructField(id_col, id_type)]
+            [StructField("doc_id", id_type)]
             + [
                 StructField(c, LongType())
                 for c in (
@@ -239,45 +236,28 @@ def cdc_chunks_pandas(
     )
 
 
-def cdc_shared_chunks(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_docs: int = 2,
-    min_len: int = 8,
-    mask_bits: int = MASK_BITS,
-    window: int = WINDOW,
-) -> DataFrame:
-    """Chunk fingerprints appearing in >= min_docs distinct
-    documents (the cross-document duplicate-content relation):
-    (chunk_fp, n_docs, n_occurrences, max_len). ``min_len`` drops
-    trivial slivers the 2^mask_bits boundary density makes common.
+def cdc_shared_chunks(docs: DataFrame) -> DataFrame:
+    """Chunk fingerprints of at least MIN_SHARED_LEN characters
+    appearing in two or more distinct documents (the cross-document
+    duplicate-content relation): (chunk_fp, n_docs, n_occurrences,
+    max_len).
     Shuffle inventory: ONE groupBy on chunk_fp — fingerprints are
     uniform (polynomial hash), so no hot keys; at corpus scale this
     is the same band-key shape as MinHash LSH."""
-    chunks = cdc_chunks_pandas(
-        docs, text_col, id_col, mask_bits=mask_bits, window=window
-    )
+    chunks = cdc_chunks_pandas(docs)
     return (
-        chunks.where(F.col("chunk_len") >= min_len)
+        chunks.where(F.col("chunk_len") >= MIN_SHARED_LEN)
         .groupBy("chunk_fp")
         .agg(
-            F.countDistinct(id_col).alias("n_docs"),
+            F.countDistinct("doc_id").alias("n_docs"),
             F.count(F.lit(1)).alias("n_occurrences"),
             F.max("chunk_len").alias("max_len"),
         )
-        .where(F.col("n_docs") >= min_docs)
+        .where(F.col("n_docs") >= 2)
     )
 
 
-def cdc_duplication_ratio(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_len: int = 8,
-    mask_bits: int = MASK_BITS,
-    window: int = WINDOW,
-) -> DataFrame:
+def cdc_duplication_ratio(docs: DataFrame) -> DataFrame:
     """Per-document duplicate-content ratio: the fraction of a
     document's characters covered by chunks whose fingerprint
     appears in at least two distinct documents — the DOC-LEVEL gating
@@ -286,7 +266,7 @@ def cdc_duplication_ratio(
 
     Returns (id, n_chars, dup_chars, n_dup_chunks, dup_ratio);
     dup_ratio rounds to 6 places for cross-engine compare. Documents
-    whose chunks are all shorter than ``min_len`` score 0.
+    whose chunks are all shorter than MIN_SHARED_LEN score 0.
 
     Shuffle inventory (single lineage — optimization round 11): CDC
     chunks exactly TILE each document (``sum(chunk_len) ==
@@ -294,33 +274,29 @@ def cdc_duplication_ratio(
     chunk), so the base-document join and the cached double scan of
     the old shape are unnecessary. One window over ``chunk_fp``
     decides sharing — ``min(id) != max(id)`` over the *eligible*
-    (``chunk_len >= min_len``) rows of the fingerprint, expressed as
+    (``chunk_len >= MIN_SHARED_LEN``) rows of the fingerprint, expressed as
     conditional min/max so ineligible rows still flow through for
     the ``n_chars`` sum — then one groupBy on the document id rolls
     everything up. Two uniform-key shuffles total; no persist, no
     semi-join, no second scan of the corpus. (min != max ⇔
     countDistinct >= 2.)"""
-    chunks = cdc_chunks_pandas(
-        docs, text_col, id_col, mask_bits=mask_bits, window=window
-    )
+    chunks = cdc_chunks_pandas(docs)
     from pyspark.sql import Window
 
     w = Window.partitionBy("chunk_fp")
-    elig_id = F.when(
-        F.col("chunk_len") >= min_len, F.col(id_col)
-    )
+    elig_id = F.when(F.col("chunk_len") >= MIN_SHARED_LEN, F.col("doc_id"))
     dup_row = (
-        (F.col("chunk_len") >= min_len)
+        (F.col("chunk_len") >= MIN_SHARED_LEN)
         & (F.min(elig_id).over(w) != F.max(elig_id).over(w))
     )
     dup_len = F.when(dup_row, F.col("chunk_len"))
     per_doc = (
         chunks.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("chunk_len"),
             dup_len.alias("_dl"),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("chunk_len").alias("n_chars"),
             F.coalesce(F.sum("_dl"), F.lit(0).cast("long")).alias(
@@ -330,7 +306,7 @@ def cdc_duplication_ratio(
         )
     )
     return per_doc.select(
-        id_col,
+        "doc_id",
         "n_chars",
         "dup_chars",
         "n_dup_chunks",

@@ -29,6 +29,14 @@ from ..functions.hashing import (
     minhash_params,
 )
 
+# The dedup queries' settings, shared with their DuckDB oracles.
+MINHASH_K = 8
+ROWS_PER_BAND = 2
+SHINGLE_N = 3
+JACCARD_THRESHOLD = 0.5
+MAX_SHINGLE_DF = 100  # shingles in more docs are dropped before the join
+MAX_EDIT_DISTANCE = 16
+
 
 def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Exact duplicate groups by content hash.
@@ -302,9 +310,8 @@ def shingle_term_relation(
     df: DataFrame,
     text_col,
     id_cols: tuple[str, ...] = ("doc_id",),
-    n: int = 3,
 ) -> DataFrame:
-    """(id_cols..., term, _h) — each document's DISTINCT n-gram token
+    """(id_cols..., term, _h) — each document's DISTINCT 3-gram token
     shingle STRINGS plus their cross-engine poly hash, in one
     Arrow-batched pass (round 12, guide §4.2). ``_h`` equals
     ``poly_hash(term)`` exactly (the same concat-identity fold
@@ -315,7 +322,7 @@ def shingle_term_relation(
     ``array_distinct(token_shingles(...))`` even under hash
     collisions. ``text_col`` may be any string Column (e.g.
     ``F.lower(text)``) — normalization stays JVM-side so case
-    semantics match the expression path. Docs with < n tokens emit
+    semantics match the expression path. Docs with < 3 tokens emit
     nothing, like the empty-array explode."""
     import re
 
@@ -338,7 +345,7 @@ def shingle_term_relation(
 
         for pdf in batches:
             texts = pdf["_t"].astype(object).fillna("").tolist()
-            sh, _seg, n_sh = _shingle_hashes_np(texts, n)
+            sh, _seg, n_sh = _shingle_hashes_np(texts, 3)
             if len(sh) == 0:
                 continue
             terms: list[str] = []
@@ -346,8 +353,8 @@ def shingle_term_relation(
                 toks = (
                     [t for t in split_ws(s.strip(" ")) if t] if s else []
                 )
-                for i in range(len(toks) - (n - 1)):
-                    terms.append(" ".join(toks[i : i + n]))
+                for i in range(len(toks) - (3 - 1)):
+                    terms.append(" ".join(toks[i : i + 3]))
             doc_idx = np.repeat(np.arange(len(texts)), n_sh)
             out = pd.DataFrame(
                 {c: pdf[c].iloc[doc_idx].to_numpy() for c in id_cols}
@@ -367,16 +374,13 @@ def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    k: int = 8,
-    rows_per_band: int = 2,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Candidate near-duplicate pairs: docs sharing >= 1 LSH band bucket.
 
     Output: (doc_a, doc_b, n_shared_bands), doc_a < doc_b.
     """
     bands = minhash_band_relation(
-        df, text_col, id_col, k, rows_per_band, shingle_n
+        df, text_col, id_col, MINHASH_K, ROWS_PER_BAND, SHINGLE_N
     )
     # shuffle_hash (not broadcast) for the self-join: both sides then
     # need the SAME shuffle of the SAME subplan, and AQE reuses the
@@ -503,16 +507,14 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
-    max_shingle_df: int = 100,
 ) -> DataFrame:
     """Near-duplicate pairs by exact n-gram Jaccard similarity.
 
     Shared-shingle equi-join; shingles appearing in more than
-    ``max_shingle_df`` docs are dropped BEFORE the join (both from the
+    MAX_SHINGLE_DF docs are dropped BEFORE the join (both from the
     join and from the per-doc set size) — the standard hot-key guard.
-    Output: (doc_a, doc_b, n_shared, jaccard) with jaccard >= threshold.
+    Output: (doc_a, doc_b, n_shared, jaccard) with jaccard >=
+    JACCARD_THRESHOLD.
     """
     # the shingle relation is distinct per doc, so (_id, h) pairs are
     # already unique — no dedup needed. The explicit repartition on h
@@ -520,9 +522,11 @@ def ngram_jaccard_pairs(
     # (df-count aggregate, rare-filter join, both self-join sides)
     # reuses instead of re-evaluating the shingle pass per consumer:
     # measured 5.1s -> 2.7s at sf0.1 vs no repartition.
-    sh = shingle_hash_relation(df, text_col, id_col, n).repartition("h")
+    sh = shingle_hash_relation(df, text_col, id_col, SHINGLE_N).repartition(
+        "h"
+    )
     rare = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df_count")).where(
-        F.col("df_count") <= max_shingle_df
+        F.col("df_count") <= MAX_SHINGLE_DF
     )
     sh = sh.join(rare.select("h"), "h")
     sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("n_sh"))
@@ -552,7 +556,7 @@ def ngram_jaccard_pairs(
                 6,
             ),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "n_shared", "jaccard")
     )
 
@@ -561,29 +565,23 @@ def edit_distance_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    max_distance: int = 16,
-    k: int = 8,
-    rows_per_band: int = 2,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Fuzzy near-dup pairs: MinHash-LSH candidates verified by EXACT
-    Levenshtein distance <= max_distance.
+    Levenshtein distance <= MAX_EDIT_DISTANCE.
 
     Output: (doc_a, doc_b, edit_distance), doc_a < doc_b.
 
     Scale shape: the O(len x len) DP runs only on LSH candidates (never
     all pairs), JVM-side via the thresholded levenshtein builtin — the
     threshold caps the DP band, so a wildly-different candidate pair
-    costs O(len x max_distance), not O(len^2). The two id-joins that
+    costs O(len x MAX_EDIT_DISTANCE), not O(len^2). The two id-joins that
     fetch the texts shuffle on uniform doc ids.
     """
-    cand = minhash_lsh_pairs(
-        df, text_col, id_col, k, rows_per_band, shingle_n
-    ).select("doc_a", "doc_b")
+    cand = minhash_lsh_pairs(df, text_col, id_col).select("doc_a", "doc_b")
     ta = df.select(F.col(id_col).alias("doc_a"), F.col(text_col).alias("_ta"))
     tb = df.select(F.col(id_col).alias("doc_b"), F.col(text_col).alias("_tb"))
-    # thresholded levenshtein returns -1 past max_distance (early exit)
-    dist = F.levenshtein(F.col("_ta"), F.col("_tb"), max_distance)
+    # thresholded levenshtein returns -1 past MAX_EDIT_DISTANCE (early exit)
+    dist = F.levenshtein(F.col("_ta"), F.col("_tb"), MAX_EDIT_DISTANCE)
     return (
         cand.join(ta, "doc_a")
         .join(tb, "doc_b")
@@ -592,35 +590,36 @@ def edit_distance_pairs(
     )
 
 
-def simhash_band_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 30,
-    bands: int = 5,
-    max_hamming: int = 4,
-    max_bucket: int = 500,
-) -> DataFrame:
+# simhash_band_pairs: SIMHASH_BANDS slices of a SIMHASH_BITS-bit
+# fingerprint. The synthetic corpus's tiny shared vocabulary makes
+# simhash space dup-dense, so the bucket cutoff and Hamming bound are
+# tight to keep the pair set a near-dup report.
+SIMHASH_BITS = 30
+SIMHASH_BANDS = 5
+SIMHASH_MAX_BUCKET = 200
+SIMHASH_MAX_HAMMING = 2
+
+
+def simhash_band_pairs(docs: DataFrame) -> DataFrame:
     """Hamming-LSH near-dup pairs over SimHash fingerprints — the
     bit-space counterpart of the MinHash band join.
 
-    The fingerprint splits into ``bands`` disjoint bit slices; two
+    The fingerprint splits into SIMHASH_BANDS disjoint bit slices; two
     documents become CANDIDATES iff they collide in at least one slice
-    (any pair within Hamming distance < bands must, by pigeonhole,
-    share an untouched slice — so recall is exact for
-    max_hamming < bands at these parameters' widths). Verification is
+    (any pair within Hamming distance < SIMHASH_BANDS must, by
+    pigeonhole, share an untouched slice — so recall is exact for
+    SIMHASH_MAX_HAMMING < SIMHASH_BANDS). Verification is
     one codegen'd ``bit_count(xor)`` — no text comparison at all.
 
     Scale shape: the self-join runs per (band, key) bucket, never
-    all-pairs; the ``max_bucket`` cutoff drops degenerate buckets
+    all-pairs; the SIMHASH_MAX_BUCKET cutoff drops degenerate buckets
     (e.g. the all-zeros band of near-empty docs) before they go
     quadratic — the same hot-key guard the n-gram Jaccard operator
     uses. One shuffle for the band join, one map-side verify.
     """
-    if bits % bands:
-        raise ValueError("bits must divide evenly into bands")
-    width = bits // bands
-    sh = simhash_relation(docs, text_col, id_col, bits).select(
+    bands = SIMHASH_BANDS
+    width = SIMHASH_BITS // bands
+    sh = simhash_relation(docs, "text", "doc_id", SIMHASH_BITS).select(
         F.col("_id").alias("id"), "sh"
     )
     banded = sh.select(
@@ -641,7 +640,7 @@ def simhash_band_pairs(
     w = Window.partitionBy("band", "key")
     kept = banded.withColumn(
         "_bsz", F.count(F.lit(1)).over(w)
-    ).where(F.col("_bsz") <= max_bucket)
+    ).where(F.col("_bsz") <= SIMHASH_MAX_BUCKET)
     left = kept.select(
         F.col("id").alias("id_a"), F.col("sh").alias("sh_a"),
         "band", "key",
@@ -658,7 +657,7 @@ def simhash_band_pairs(
     ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int")
     return (
         cand.withColumn("hamming", ham)
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("id_a", "id_b", "hamming")
     )
 
@@ -937,14 +936,15 @@ def excise_spans(
     )
 
 
+# self_repetition_spans' shingle width, shared with its oracle.
+SELF_REP_K = 16
+
+
 def self_repetition_spans(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 40,
+    df: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
     """WITHIN-document repetition spans (round 10): maximal spans
-    whose every k-shingle already occurred EARLIER in the SAME
+    whose every SELF_REP_K-char shingle already occurred EARLIER in the SAME
     document — the de-looping cleanup for model-generated or
     boilerplate-heavy text (the cross-document twin is
     duplicated_spans). The first occurrence is never flagged, so
@@ -965,8 +965,8 @@ def self_repetition_spans(
         tid.alias("id"),
         F.explode(
             F.when(
-                F.length(text) >= k,
-                F.sequence(F.lit(1), F.length(text) - (k - 1)),
+                F.length(text) >= SELF_REP_K,
+                F.sequence(F.lit(1), F.length(text) - (SELF_REP_K - 1)),
             ).otherwise(F.array().cast("array<int>"))
         ).alias("i"),
         text.alias("_t"),
@@ -974,7 +974,7 @@ def self_repetition_spans(
         "id",
         F.col("i").cast("long").alias("i"),
         F.substring(
-            F.md5(F.substr(F.col("_t"), F.col("i"), F.lit(k))), 1, 16
+            F.md5(F.substr(F.col("_t"), F.col("i"), F.lit(SELF_REP_K))), 1, 16
         ).alias("h"),
     )
     first = F.min("i").over(Window.partitionBy("id", "h"))
@@ -989,8 +989,8 @@ def self_repetition_spans(
         islands.groupBy("id", "island")
         .agg(
             F.min("i").alias("span_start"),
-            (F.max("i") + (k - 1)).alias("span_end"),
-            (F.max("i") - F.min("i") + k).alias("span_chars"),
+            (F.max("i") + (SELF_REP_K - 1)).alias("span_end"),
+            (F.max("i") - F.min("i") + SELF_REP_K).alias("span_chars"),
         )
         .drop("island")
     )

@@ -89,7 +89,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = 50,
     driver_edge_cap: int | None = None,
 ) -> DataFrame:
     """(node, cluster_id) for every node in ``edges``; cluster_id = min
@@ -163,7 +162,7 @@ def connected_components(
         labels = sym.where(F.col("a") == F.col("b")).select(
             F.col("a").alias("node"), F.col("a").alias("label")
         )
-        labels = _label_rounds(sym, labels, max_iterations)
+        labels = _label_rounds(sym, labels, 50)
     finally:
         if old_sp is None:
             sess.conf.unset("spark.sql.shuffle.partitions")

@@ -63,6 +63,8 @@ BYTE_C = 23
 LEN_BASE = 64
 LEN_MOD = 191
 FRAME_BYTES = 16
+FRAME_STRIDE = 4  # sample_frames keeps every FRAME_STRIDE-th frame
+FEATURE_DIM = 8  # extract_features' vector length
 MEDIA_TYPES = ("image", "audio", "video")
 
 META_SCHEMA = T.StructType(
@@ -88,7 +90,7 @@ def _payload_bytes(doc_id: int) -> bytes:
     return ((doc_id * BYTE_A + i * BYTE_B + BYTE_C) % 256).astype(np.uint8).tobytes()
 
 
-def attach_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_media(df: DataFrame) -> DataFrame:
     """Attach the deterministic binary payload + metadata struct.
 
     Output schema: input columns + (payload binary, meta struct). The
@@ -107,7 +109,7 @@ def attach_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["doc_id"].to_numpy()
             payloads = [_payload_bytes(int(d)) for d in ids]
             lens = np.array([len(p) for p in payloads], dtype=np.int64)
             width = (lens // 8).astype(np.int32)
@@ -158,7 +160,7 @@ WAV_SAMPLE_RATE = 8000
 WAV_HEADER_BYTES = 44  # RIFF(12) + fmt chunk(24) + data header(8), PCM
 
 
-def wav_encode(samples: bytes, sample_rate: int = WAV_SAMPLE_RATE) -> bytes:
+def wav_encode(samples: bytes) -> bytes:
     """Encode 8-bit unsigned mono PCM samples into a genuine RIFF/WAVE
     container (stdlib ``wave`` writer — a real, spec-compliant codec,
     not a fake). Round-trips through any standard WAV reader."""
@@ -169,7 +171,7 @@ def wav_encode(samples: bytes, sample_rate: int = WAV_SAMPLE_RATE) -> bytes:
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
         w.setsampwidth(1)  # 8-bit PCM — stored unsigned per the spec
-        w.setframerate(sample_rate)
+        w.setframerate(WAV_SAMPLE_RATE)
         w.writeframes(samples)
     return buf.getvalue()
 
@@ -572,7 +574,7 @@ def real_decoder(payload: bytes, meta: dict) -> dict:
     }
 
 
-def attach_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_wav(df: DataFrame) -> DataFrame:
     """Attach a GENUINE RIFF/WAVE payload per row: the deterministic
     sample model (byte ``i`` = ``(d*131 + i*197 + 23) % 256``) encoded
     through the stdlib ``wave`` writer. Unlike :func:`attach_media`'s
@@ -590,7 +592,7 @@ def attach_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["doc_id"].to_numpy()
             payloads = [wav_encode(_payload_bytes(int(d))) for d in ids]
             metas = []
             for d, p in zip(ids, payloads):
@@ -612,7 +614,7 @@ def attach_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.mapInPandas(gen, schema=out_schema)
 
 
-def attach_bmp(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_bmp(df: DataFrame) -> DataFrame:
     """Attach a GENUINE BMP payload per row: the deterministic byte
     model's first ``width*8`` bytes as a row-major grayscale plane,
     encoded through :func:`bmp_encode` (headers + palette + bottom-up
@@ -631,7 +633,7 @@ def attach_bmp(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["doc_id"].to_numpy()
             payloads, metas = [], []
             for d in ids:
                 n = LEN_BASE + int(d) % LEN_MOD
@@ -656,7 +658,7 @@ def attach_bmp(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.mapInPandas(gen, schema=out_schema)
 
 
-def attach_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_png(df: DataFrame) -> DataFrame:
     """Attach a GENUINE PNG payload per row: the deterministic byte
     model's first ``width*8`` bytes as a row-major grayscale plane,
     encoded through :func:`png_encode` (zlib-compressed scanlines,
@@ -677,7 +679,7 @@ def attach_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["doc_id"].to_numpy()
             payloads, metas = [], []
             for d in ids:
                 n = LEN_BASE + int(d) % LEN_MOD
@@ -702,7 +704,7 @@ def attach_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.mapInPandas(gen, schema=out_schema)
 
 
-def attach_y4m(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_y4m(df: DataFrame) -> DataFrame:
     """Attach a GENUINE YUV4MPEG2 payload per row: the deterministic
     byte model's first ``(n // 64) * 64`` bytes as 8x8 mono frames,
     encoded through :func:`y4m_encode` (stream header + FRAME
@@ -721,7 +723,7 @@ def attach_y4m(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["doc_id"].to_numpy()
             payloads, metas = [], []
             for d in ids:
                 n = LEN_BASE + int(d) % LEN_MOD
@@ -899,9 +901,9 @@ def decode_stats(media: DataFrame) -> DataFrame:
     )
 
 
-def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Fixed-dim feature vector per payload: stripe-mean pooling
-    (feature[k] = mean of bytes at positions ≡ k mod dim). Output
+    (feature[k] = mean of bytes at positions ≡ k mod FEATURE_DIM). Output
     ``(doc_id, feature array<double>)`` — the embedding-extraction
     plumbing for the similarity operators."""
     ensure_shipped(media.sparkSession)
@@ -918,8 +920,11 @@ def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 b = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
                 vec = [
-                    _r4(float(b[k::dim].sum()) / len(b[k::dim]))
-                    for k in range(dim)
+                    _r4(
+                        float(b[k::FEATURE_DIM].sum())
+                        / len(b[k::FEATURE_DIM])
+                    )
+                    for k in range(FEATURE_DIM)
                 ]
                 ids.append(int(doc_id))
                 vecs.append(vec)
@@ -928,9 +933,9 @@ def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
     return media.select("doc_id", "payload").mapInPandas(feats, schema=out_schema)
 
 
-def sample_frames(media: DataFrame, every: int = 4) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame sampling for 'video' payloads: split into FRAME_BYTES-byte
-    frames, keep every ``every``-th, explode one row per kept frame.
+    frames, keep every FRAME_STRIDE-th, explode one row per kept frame.
 
     Output ``(doc_id, frame_idx, frame_checksum)``. mapInPandas handles
     the 1→N fan-out natively (output batch is longer than input batch).
@@ -950,7 +955,7 @@ def sample_frames(media: DataFrame, every: int = 4) -> DataFrame:
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 b = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
                 n_frames = len(b) // FRAME_BYTES
-                for j in range(0, n_frames, every):
+                for j in range(0, n_frames, FRAME_STRIDE):
                     fr = b[j * FRAME_BYTES : (j + 1) * FRAME_BYTES]
                     ids.append(int(doc_id))
                     idxs.append(j)
@@ -966,10 +971,10 @@ def sample_frames(media: DataFrame, every: int = 4) -> DataFrame:
 AUDIO_WINDOW = FRAME_BYTES  # samples per RMS window
 
 
-def audio_window_rms(media: DataFrame, window: int = AUDIO_WINDOW) -> DataFrame:
+def audio_window_rms(media: DataFrame) -> DataFrame:
     """Windowed RMS loudness over a PCM payload — the audio analogue of
     frame sampling: payload bytes are 8-bit unsigned samples, centered
-    to [-1, 1), and each ``window``-sample block yields its root-mean-
+    to [-1, 1), and each AUDIO_WINDOW-sample block yields its root-mean-
     square energy (the feature VAD/silence-trim/loudness-normalization
     stages consume).
 
@@ -995,12 +1000,14 @@ def audio_window_rms(media: DataFrame, window: int = AUDIO_WINDOW) -> DataFrame:
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 a = np.frombuffer(payload, dtype=np.uint8).astype(np.float64)
                 s = (a - 128.0) / 128.0
-                n_w = len(s) // window
+                n_w = len(s) // AUDIO_WINDOW
                 if n_w == 0:
                     continue
-                sq = s[: n_w * window] * s[: n_w * window]
-                sums = np.add.reduceat(sq, np.arange(0, n_w * window, window))
-                r = np.floor(np.sqrt(sums / window) * 10000.0) / 10000.0
+                sq = s[: n_w * AUDIO_WINDOW] * s[: n_w * AUDIO_WINDOW]
+                sums = np.add.reduceat(
+                    sq, np.arange(0, n_w * AUDIO_WINDOW, AUDIO_WINDOW)
+                )
+                r = np.floor(np.sqrt(sums / AUDIO_WINDOW) * 10000.0) / 10000.0
                 ids.extend([int(doc_id)] * n_w)
                 wins.extend(range(n_w))
                 vals.extend(float(x) for x in r)
@@ -1016,13 +1023,12 @@ def audio_window_rms(media: DataFrame, window: int = AUDIO_WINDOW) -> DataFrame:
 SCENE_CUT_THRESHOLD = 110.5  # mean abs inter-frame byte delta (splits the synthetic corpus ~50/50 so the flag carries signal)
 
 
-def frame_deltas(
-    media: DataFrame, threshold: float = SCENE_CUT_THRESHOLD
-) -> DataFrame:
+def frame_deltas(media: DataFrame) -> DataFrame:
     """Inter-frame deltas + scene-cut flags over a video payload — the
     keyframe-selection primitive: frame k's delta is the mean absolute
-    byte difference against frame k-1, and a delta above ``threshold``
-    marks a cut (where a sampler would emit a keyframe).
+    byte difference against frame k-1, and a delta above
+    SCENE_CUT_THRESHOLD marks a cut (where a sampler would emit a
+    keyframe).
 
     One narrow Arrow stage; per-frame sums via ``np.add.reduceat``
     (sequential within each segment — the order the SQL oracle's fold
@@ -1060,7 +1066,7 @@ def frame_deltas(
                 ids.extend([int(doc_id)] * (n_f - 1))
                 idxs.extend(range(1, n_f))
                 vals.extend(float(x) for x in d)
-                cuts.extend(bool(x > threshold) for x in d)
+                cuts.extend(bool(x > SCENE_CUT_THRESHOLD) for x in d)
             yield pd.DataFrame(
                 {
                     "doc_id": ids,

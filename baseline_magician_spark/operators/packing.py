@@ -5,7 +5,7 @@ into fixed-length context windows) that GPT-style pretraining uses.
 Scale shape: a single global concatenation order would funnel the
 running token sum through ONE window partition — a driver-sized
 bottleneck at 100 TB. Packing instead runs per *stream bucket*
-(``doc_id % n_buckets``): each bucket is an independent token stream
+(``doc_id % N_BUCKETS``): each bucket is an independent token stream
 packed in parallel, one uniform shuffle on the bucket key, and the
 chunk ids are globally unique as (bucket, chunk_in_bucket). Production
 would bucket by a salted hash; the modulo keeps the policy reproducible
@@ -22,26 +22,24 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def pack_sequences(
-    docs: DataFrame,
-    token_count: Column,
-    ctx_len: int = 512,
-    n_buckets: int = 8,
-    id_col: str = "doc_id",
-) -> DataFrame:
+CTX_LEN = 512  # tokens per training context window
+N_BUCKETS = 8  # independent packing streams
+
+
+def pack_sequences(docs: DataFrame, token_count: Column) -> DataFrame:
     """Assign each document its span in the packed token stream.
 
     Output, one row per input document with tokens:
     (doc_id, bucket, n_tok, start_offset, chunk_start, chunk_end) —
     ``start_offset`` is the document's first token position within its
-    bucket's stream, ``chunk_start``/``chunk_end`` the ctx_len-sized
+    bucket's stream, ``chunk_start``/``chunk_end`` the CTX_LEN-sized
     windows the document lands in (a document longer than the residual
     window spans several chunks; cross-chunk attention masking is the
     trainer's concern, as in standard concat-and-chunk).
     """
     t = docs.select(
-        F.col(id_col).alias("doc_id"),
-        (F.col(id_col) % n_buckets).alias("bucket"),
+        F.col("doc_id").alias("doc_id"),
+        (F.col("doc_id") % N_BUCKETS).alias("bucket"),
         token_count.alias("n_tok"),
     ).where(F.col("n_tok") > 0)
     w = (
@@ -57,19 +55,19 @@ def pack_sequences(
         "bucket",
         "n_tok",
         "start_offset",
-        F.floor(F.col("start_offset") / ctx_len).alias("chunk_start"),
-        F.floor((F.col("start_offset") + F.col("n_tok") - 1) / ctx_len).alias(
+        F.floor(F.col("start_offset") / CTX_LEN).alias("chunk_start"),
+        F.floor((F.col("start_offset") + F.col("n_tok") - 1) / CTX_LEN).alias(
             "chunk_end"
         ),
     )
 
 
-def chunk_manifest(packed: DataFrame, ctx_len: int = 512) -> DataFrame:
+def chunk_manifest(packed: DataFrame) -> DataFrame:
     """Aggregate the packing into a per-chunk manifest:
     (bucket, chunk_id, n_docs, n_tokens_in_chunk) — the shape a data
     loader consumes. Documents spanning several chunks contribute their
     per-chunk token slice, so every full chunk sums to exactly
-    ``ctx_len`` tokens."""
+    CTX_LEN tokens."""
     spans = packed.select(
         "bucket",
         "doc_id",
@@ -79,8 +77,8 @@ def chunk_manifest(packed: DataFrame, ctx_len: int = 512) -> DataFrame:
         "start_offset",
         "n_tok",
     )
-    chunk_lo = F.col("chunk_id") * ctx_len
-    chunk_hi = chunk_lo + ctx_len
+    chunk_lo = F.col("chunk_id") * CTX_LEN
+    chunk_hi = chunk_lo + CTX_LEN
     doc_lo = F.col("start_offset")
     doc_hi = doc_lo + F.col("n_tok")
     overlap = F.least(chunk_hi, doc_hi) - F.greatest(chunk_lo, doc_lo)
@@ -94,21 +92,24 @@ def chunk_manifest(packed: DataFrame, ctx_len: int = 512) -> DataFrame:
     )
 
 
+BATCH_BUCKET_WIDTH = 8
+BATCH_SIZE = 8
+
+
 def length_bucketed_batches(
     df: DataFrame,
     id_col: str,
     n_tokens_col: Column,
-    bucket_width: int = 16,
-    batch_size: int = 8,
 ) -> DataFrame:
     """Length-bucketed batch assembly — the padding-minimization stage
     of an inference/training dataloader: documents group into
-    fixed-width token-length buckets, each bucket fills batches of
-    ``batch_size`` in deterministic id order, and every batch reports
+    BATCH_BUCKET_WIDTH-token length buckets, each bucket fills batches
+    of BATCH_SIZE in deterministic id order, and every batch reports
     its padding efficiency (1 - sum/(n*max) is the fraction of the
     padded tensor that is padding).
 
-    Plan shape: one map-side projection (bucket = n_tokens div width),
+    Plan shape: one map-side projection (bucket = n_tokens div
+    BATCH_BUCKET_WIDTH),
     ONE shuffle for the per-bucket row_number window, then the
     per-batch aggregate rides the same partitioning. Buckets are the
     parallel unit at scale; batch ids are dense within each bucket so
@@ -118,13 +119,13 @@ def length_bucketed_batches(
         F.col(id_col).alias("_id"),
         n_tokens_col.cast("long").alias("_nt"),
     ).withColumn(
-        "bucket", (F.col("_nt") / bucket_width).cast("long")
+        "bucket", (F.col("_nt") / BATCH_BUCKET_WIDTH).cast("long")
     )
     w = Window.partitionBy("bucket").orderBy("_id")
     return (
         bucketed.withColumn(
             "batch_id",
-            ((F.row_number().over(w) - 1) / batch_size).cast("long"),
+            ((F.row_number().over(w) - 1) / BATCH_SIZE).cast("long"),
         )
         .groupBy("bucket", "batch_id")
         .agg(

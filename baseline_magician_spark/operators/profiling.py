@@ -68,14 +68,14 @@ def _cells(df: DataFrame) -> list[tuple[str, str, Column]]:
     return cells
 
 
-def profile_table(df: DataFrame, round_to: int = 6) -> DataFrame:
+def profile_table(df: DataFrame) -> DataFrame:
     """One-pass profile: ``(column, stat, value)`` rows, values rounded
-    to ``round_to`` decimals (means are the only non-exact cell)."""
+    to 6 decimals (means are the only non-exact cell)."""
     cells = _cells(df)
     df = df.toDF(*[f"_p{i}" for i in range(len(df.columns))])
     wide = df.agg(
         *[
-            F.round(expr, round_to).alias(f"{i}")
+            F.round(expr, 6).alias(f"{i}")
             for i, (_, _, expr) in enumerate(cells)
         ]
     )
@@ -96,11 +96,7 @@ def profile_table(df: DataFrame, round_to: int = 6) -> DataFrame:
     )
 
 
-def check_constraints(
-    df: DataFrame,
-    checks: list[tuple],
-    round_to: int = 6,
-) -> DataFrame:
+def check_constraints(df: DataFrame, checks: list[tuple]) -> DataFrame:
     """Declarative data-quality constraint suite (the Deequ-style
     gate a 100 TB ingest runs per batch): each check is
     (name, metric aggregate Column, predicate) where predicate is a
@@ -114,7 +110,7 @@ def check_constraints(
     is free); no per-constraint jobs."""
     wide = df.agg(
         *[
-            F.round(m.cast("double"), round_to).alias(f"_c{i}")
+            F.round(m.cast("double"), 6).alias(f"_c{i}")
             for i, (_n, m, _p) in enumerate(checks)
         ]
     )
@@ -135,9 +131,7 @@ def check_constraints(
     return wide.select(F.explode(rows).alias("_r")).select("_r.*")
 
 
-def key_skew_profile(
-    df: DataFrame, key: str, round_to: int = 6
-) -> DataFrame:
+def key_skew_profile(df: DataFrame, key: str) -> DataFrame:
     """Hot-key diagnostics for a shuffle key: one row of distribution
     stats over the per-key counts — n_keys, total rows, top-1 key
     share, max/mean count ratio, and the Gini coefficient of the
@@ -161,9 +155,9 @@ def key_skew_profile(
     return ranked.agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.sum("_n").alias("n_rows"),
-        F.round(F.max("_n") / F.sum("_n"), round_to).alias("top1_share"),
+        F.round(F.max("_n") / F.sum("_n"), 6).alias("top1_share"),
         F.round(
-            F.max("_n") / (F.sum("_n") / F.count(F.lit(1))), round_to
+            F.max("_n") / (F.sum("_n") / F.count(F.lit(1))), 6
         ).alias("max_mean_ratio"),
         # Gini over sorted counts: 2*sum(i*x_i)/(n*sum(x)) - (n+1)/n
         F.round(
@@ -171,7 +165,7 @@ def key_skew_profile(
             * F.sum(F.col("_i") * F.col("_n"))
             / (F.count(F.lit(1)) * F.sum("_n"))
             - (F.count(F.lit(1)) + 1) / F.count(F.lit(1)),
-            round_to,
+            6,
         ).alias("gini"),
     )
 
@@ -251,7 +245,6 @@ def fk_coverage(
     child_key: str,
     parent_key: str,
     name: str,
-    round_to: int = 6,
 ) -> DataFrame:
     """Referential-integrity check: how well a child relation's
     foreign key is covered by the parent's key set.
@@ -278,9 +271,7 @@ def fk_coverage(
         F.count(F.lit(1)).alias("n_child"),
         (F.count(F.lit(1)) - nn).alias("n_null_keys"),
         (nn - matched).alias("n_orphans"),
-        F.round(matched.cast("double") / nn, round_to).alias(
-            "match_rate"
-        ),
+        F.round(matched.cast("double") / nn, 6).alias("match_rate"),
         ((nn - matched) == 0).alias("passed"),
     )
     return agg.select(F.lit(name).alias("relationship"), "*")

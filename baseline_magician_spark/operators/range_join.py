@@ -24,34 +24,28 @@ bound — see functions.ip.parse_cidr_py).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 PREFIX_BITS = 16  # bucket width of the bucketed join: /16 -> 65536 buckets
 
 
-def broadcast_range_join(
-    facts: DataFrame,
-    networks: DataFrame,
-    ip_col: Column | str = "ip_long",
-) -> DataFrame:
-    """facts ⋈ networks ON ip BETWEEN start_long AND end_long (broadcast)."""
-    ip = F.col(ip_col) if isinstance(ip_col, str) else ip_col
+def broadcast_range_join(facts: DataFrame, networks: DataFrame) -> DataFrame:
+    """facts ⋈ networks ON _ip_long BETWEEN start_long AND end_long
+    (broadcast)."""
+    ip = F.col("_ip_long")
     cond = (ip >= networks["start_long"]) & (ip <= networks["end_long"])
     return facts.join(F.broadcast(networks), cond)
 
 
-def bucketed_range_join(
-    facts: DataFrame,
-    networks: DataFrame,
-    ip_col: Column | str = "ip_long",
-) -> DataFrame:
-    """Equi-join on IP prefix bucket + residual range filter.
+def bucketed_range_join(facts: DataFrame, networks: DataFrame) -> DataFrame:
+    """Equi-join on the prefix bucket of ``_ip_long`` + residual range
+    filter.
 
     Requires every network's [start_long, end_long] to be bucket-
     exploded; correct for any range, not just CIDR-aligned ones.
     """
-    ip = F.col(ip_col) if isinstance(ip_col, str) else ip_col
+    ip = F.col("_ip_long")
     shift = 32 - PREFIX_BITS
 
     nets = networks.withColumn(

@@ -94,19 +94,24 @@ def split_assign_sql(key_sql: str, fractions: dict[str, float], seed: str) -> st
     )
 
 
+# stratified_sample's hash seed, and the fraction kept of strata not
+# listed in ``fractions``.
+STRATA_SEED = "strat7"
+STRATA_DEFAULT = 0.1
+
+
 def stratified_sample(
     df: DataFrame,
     strata_col: str,
     fractions: dict[str, float],
     key_col: str,
-    seed: str = "s0",
-    default_fraction: float = 0.0,
 ) -> DataFrame:
     """Per-stratum deterministic Bernoulli sample: keep a row iff
-    ``hash60(key) < fraction[stratum] * 2^60``. Narrow (no shuffle);
+    ``hash60(key, STRATA_SEED) < fraction[stratum] * 2^60``
+    (STRATA_DEFAULT for unlisted strata). Narrow (no shuffle);
     thresholds become a codegen'd CASE over the stratum column."""
-    h = hash60(F.col(key_col), seed)
-    thr: Column = F.lit(int(default_fraction * HASH_SPACE))
+    h = hash60(F.col(key_col), STRATA_SEED)
+    thr: Column = F.lit(int(STRATA_DEFAULT * HASH_SPACE))
     for stratum, frac in fractions.items():
         thr = F.when(
             F.col(strata_col) == stratum, F.lit(int(frac * HASH_SPACE))
@@ -186,31 +191,33 @@ def mixture_plan(
     )
 
 
-def deterministic_shuffle(
-    df: DataFrame,
-    id_col: str,
-    seed: str = "epoch0",
-    n_buckets: int = 16,
-) -> DataFrame:
+# deterministic_shuffle's epoch key and bucket count.
+SHUFFLE_SEED = "epoch0"
+SHUFFLE_BUCKETS = 16
+
+
+def deterministic_shuffle(df: DataFrame, id_col: str) -> DataFrame:
     """Exact global pseudorandom permutation WITHOUT a global sort —
     the training-order shuffle for data loading.
 
     A naive ``row_number() OVER (ORDER BY hash)`` funnels the whole
     corpus through one partition. Two-phase ranking instead: the sort
-    key is (bucket, hash, id) with bucket = hash % n_buckets; ranks are
-    computed per bucket (uniform shuffle), and each bucket's global
-    offset comes from a tiny bucket-count aggregate (n_buckets rows)
+    key is (bucket, hash, id) with bucket = hash % SHUFFLE_BUCKETS; ranks
+    are computed per bucket (uniform shuffle), and each bucket's global
+    offset comes from a tiny bucket-count aggregate (SHUFFLE_BUCKETS rows)
     joined back broadcast. global_rank = offset + rank_in_bucket
     reproduces the single-sort answer exactly at any scale.
 
     Output: (id, shuffle_rank), rank 0-based, a permutation of the
-    input rows; re-keying ``seed`` yields an independent epoch order.
+    input rows; re-keying SHUFFLE_SEED yields an independent epoch order.
     """
     from pyspark.sql import Window as W
 
     from ..functions.hashing import poly_hash
 
-    hk = poly_hash(F.concat(F.col(id_col).cast("string"), F.lit(seed)))
+    hk = poly_hash(
+        F.concat(F.col(id_col).cast("string"), F.lit(SHUFFLE_SEED))
+    )
     # repartition on the bucket BEFORE branching: the ranking window
     # and the bucket-count aggregate then share ONE exchange (and one
     # evaluation of the per-character hash fold) instead of scanning
@@ -219,7 +226,7 @@ def deterministic_shuffle(
     t = df.select(
         F.col(id_col).alias("id"),
         hk.alias("_hk"),
-        (hk % n_buckets).alias("_bucket"),
+        (hk % SHUFFLE_BUCKETS).alias("_bucket"),
     ).repartition("_bucket")
     w = W.partitionBy("_bucket").orderBy("_hk", "id")
     ranked = t.withColumn("_r", F.row_number().over(w) - 1)
@@ -242,29 +249,23 @@ def temperature_weights(
     df: DataFrame,
     source_col: str,
     size_col: Column,
-    alpha: float = 0.5,
 ) -> DataFrame:
     """Temperature-based mixture reweighting: sampling weight per
-    source proportional to its token share raised to ``alpha`` (the
-    multilingual-balancing scheme — alpha < 1 flattens the
-    distribution, boosting low-resource sources; alpha = 1 is
-    proportional, 0 is uniform).
+    source proportional to the square root of its token share
+    (temperature alpha = 0.5, the multilingual-balancing scheme: it
+    flattens the distribution, boosting low-resource sources).
 
     Unlike :func:`mixture_plan` (explicit target weights) the targets
     here are DERIVED from the corpus distribution. Output per source:
     (source, n_docs, actual_size, share, weight, boost) where
-    ``weight = share^alpha / sum(share^alpha)`` and ``boost`` is the
+    ``weight = sqrt(share) / sum(sqrt(share))`` and ``boost`` is the
     up/down-sampling factor weight/share.
 
     Plan shape: one corpus pass + two #sources-sized aggregates —
-    the totals broadcast back, nothing driver-side. ``alpha = 0.5``
-    uses sqrt (IEEE-exact in every engine, so the oracle hash-matches
-    bit-for-bit); other alphas use pow, whose last-ulp behavior is
-    libm-specific — production-fine, oracle-checked at 0.5.
+    the totals broadcast back, nothing driver-side. sqrt is
+    IEEE-exact in every engine, so the oracle hash-matches
+    bit-for-bit.
     """
-    share_pow = (
-        (lambda c: F.sqrt(c)) if alpha == 0.5 else (lambda c: F.pow(c, alpha))
-    )
     per_source = df.groupBy(F.col(source_col).alias("source")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(size_col).cast("long").alias("actual_size"),
@@ -274,7 +275,7 @@ def temperature_weights(
     )
     shared = per_source.crossJoin(F.broadcast(total)).withColumn(
         "_share", F.col("actual_size") / F.col("_total")
-    ).withColumn("_w_raw", share_pow(F.col("_share")))
+    ).withColumn("_w_raw", F.sqrt(F.col("_share")))
     wsum = shared.agg(F.sum("_w_raw").alias("_wsum"))
     return (
         shared.crossJoin(F.broadcast(wsum))

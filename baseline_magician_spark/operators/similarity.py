@@ -28,6 +28,17 @@ _HP_MOD = 1_000_003
 _HP_A = 1_315_423_911
 _HP_B = 2_654_435_761
 
+# The embeddings table's id and vector columns, which every operator
+# here reads.
+ID_COL = "vec_id"
+VEC_COL = "embedding"
+TOP_K = 10  # neighbours per query
+N_QUERY_VECS = 5  # vec_id < N_QUERY_VECS is the query set
+N_PROBE = 4  # IVF cells probed per query
+N_CENTROIDS = 16  # IVF cells, seeded from the first N_CENTROIDS vectors
+PQ_M = 4  # PQ subspaces
+PQ_CODES = 16  # PQ codes per subspace, seeded like the IVF centroids
+
 
 def dot(a: Column, b: Column) -> Column:
     """Exact dot product of two array<numeric> columns (fold, JVM-side)."""
@@ -68,22 +79,15 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def ivf_topk(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_query_vecs: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    centroids: list[tuple[int, list[float]]] | None = None,
+    embeddings: DataFrame, centroids: list[tuple[int, list[float]]]
 ) -> DataFrame:
-    """IVF approximate top-k: assign corpus vectors to centroid cells
-    map-side, probe each query's n_probe nearest cells, exact-rescore
-    only the candidates.
+    """IVF approximate top-TOP_K for the N_QUERY_VECS query vectors:
+    assign corpus vectors to ``centroids`` cells map-side, probe each
+    query's N_PROBE nearest cells, exact-rescore only the candidates.
 
-    "Training" here seeds centroids from the first ``n_centroids``
-    vectors (deterministic, oracle-reproducible); production would
-    k-means them — every other step (collect centroids to driver,
+    The queries seed ``centroids`` from the first N_CENTROIDS vectors
+    (deterministic, oracle-reproducible); production would k-means
+    them — every other step (collect centroids to driver,
     map-side assign, probe, cell-join, rescore) is the real IVF
     dataflow. Plan shape: zero shuffles until the final per-query
     top-k, because the cell key is computed in the scan projection and
@@ -94,30 +98,16 @@ def ivf_topk(
     """
     from pyspark.sql import Window as W
 
-    if centroids is None:
-        centroids = [
-            (int(r[0]), list(r[1]))
-            for r in embeddings.where(F.col(id_col) < n_centroids)
-            .select(id_col, vec_col)
-            .collect()
-        ]
     centroids = sorted(centroids)
-
     assigned = _ivf_assign_relation(
         embeddings,
         centroids,
-        id_col,
-        vec_col,
         out_id="neighbor_id",
         out_vec="_cvec",
         keep_vec=True,
     )
     probes = _ivf_probe_relation(
-        embeddings.where(F.col(id_col) < n_query_vecs),
-        centroids,
-        n_probe,
-        id_col,
-        vec_col,
+        embeddings.where(F.col(ID_COL) < N_QUERY_VECS), centroids, N_PROBE
     )
     scored = _pairwise_score_relation(
         assigned.join(F.broadcast(probes), "cell")
@@ -133,28 +123,23 @@ def ivf_topk(
         F.round(F.col("_raw"), 6).alias("cosine_sim"),
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= TOP_K
+    )
 
 
 def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    exclude_self: bool = True,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+    """Exact top-TOP_K cosine neighbors for each query vector.
 
-    Output: (query_id, neighbor_id, cosine_sim, rank), rank 1..k,
+    Output: (query_id, neighbor_id, cosine_sim, rank), rank 1..TOP_K,
     ties broken by neighbor id. The queries side is broadcast — the
     corpus is scanned ONCE regardless of |Q|.
 
-    ``exclude_self`` drops corpus rows whose id EQUALS the query id —
-    correct only when queries share the corpus id space (the self-
-    search case). Pass False when the query set is a separate table
-    whose ids merely coincide numerically, or the colliding corpus
-    vectors would be silently excluded from their top-k.
+    Corpus rows whose id EQUALS the query id are dropped: the queries
+    are drawn from the corpus (the self-search case).
 
     The per-pair cosine stays a JVM expression fold. The numpy
     pairwise kernel the IVF operators use lost the interleaved sf0.1
@@ -166,14 +151,13 @@ def brute_force_topk(
     from pyspark.sql import Window as W
 
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
+        F.col(ID_COL).alias("query_id"), F.col(VEC_COL).alias("_qvec")
     )
     c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec")
+        F.col(ID_COL).alias("neighbor_id"), F.col(VEC_COL).alias("_cvec")
     )
     pairs = c.crossJoin(F.broadcast(q))
-    if exclude_self:
-        pairs = pairs.where(F.col("query_id") != F.col("neighbor_id"))
+    pairs = pairs.where(F.col("query_id") != F.col("neighbor_id"))
     sim = pairs.select(
         "query_id",
         "neighbor_id",
@@ -184,7 +168,7 @@ def brute_force_topk(
     )
     return (
         sim.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
     )
 
 
@@ -203,7 +187,6 @@ def lsh_bucketed_pairs(
     n_planes: int = 8,
     threshold: float = 0.9,
     dim: int | None = None,
-    salt: int | str = "auto",
     center: bool = False,
 ) -> DataFrame:
     """Near-duplicate vector pairs: same LSH bucket AND exact cosine >=
@@ -211,7 +194,7 @@ def lsh_bucketed_pairs(
 
     Scale shape, in order of importance:
 
-    - **Adaptive pair-space salting** (``salt``): a skewed bucket (at
+    - **Adaptive pair-space salting**: a skewed bucket (at
       worst, every vector in one bucket — real corpora of same-sign
       features do this) turns the triangular self-join into one
       quadratic task. Each side tags its own salt ``id % S`` and
@@ -221,11 +204,11 @@ def lsh_bucketed_pairs(
       (sa, sb) is a function of the pair. Salting duplicates every
       (id, vec, norm) row S×, which is pure tax when the bucket
       histogram is already healthy (e.g. after per-row centering), so
-      ``salt="auto"`` sizes S from the ACTUAL histogram — one tiny
+      S is sized from the ACTUAL histogram — one tiny
       driver round-trip (max bucket count, the same driver-literal
       pattern the IVF centroids use): S = ceil(max_bucket / 4096)
       clamped to [1, 8], and S == 1 skips the salt machinery
-      entirely. Pass an int to pin S (0-skew known shapes).
+      entirely.
     - The norm and the bucket are computed ONCE per row, in one Arrow
       pass, before the self-join (O(N) not O(pairs); the value is
       IEEE-identical since the input array is).
@@ -246,28 +229,26 @@ def lsh_bucketed_pairs(
         center=center,
         with_norm=True,
     ).repartition("_bucket")
-    if salt == "auto":
-        # The histogram job would otherwise re-run the upstream
-        # feature pipeline (often a Python mapInPandas stage) a third
-        # time — persist the tiny (id, vec, norm, bucket) projection
-        # so histogram + both join sides read one materialization.
-        # Blocks are O(corpus × vec) and evict LRU.
-        with_bucket = with_bucket.persist()
-        row = (
-            with_bucket.groupBy("_bucket")
-            .count()
-            .agg(F.max("count").alias("mx"))
-            .collect()[0]
-        )
-        mx = int(row["mx"] or 0)
-        salt = max(
-            1,
-            min(
-                _SALT_MAX,
-                -(-mx // _SALT_HEALTHY_BUCKET),  # ceil div
-            ),
-        )
-    salt = int(salt)
+    # The histogram job would otherwise re-run the upstream feature
+    # pipeline (often a Python mapInPandas stage) a third time —
+    # persist the tiny (id, vec, norm, bucket) projection so histogram
+    # + both join sides read one materialization. Blocks are
+    # O(corpus × vec) and evict LRU.
+    with_bucket = with_bucket.persist()
+    row = (
+        with_bucket.groupBy("_bucket")
+        .count()
+        .agg(F.max("count").alias("mx"))
+        .collect()[0]
+    )
+    mx = int(row["mx"] or 0)
+    salt = max(
+        1,
+        min(
+            _SALT_MAX,
+            -(-mx // _SALT_HEALTHY_BUCKET),  # ceil div
+        ),
+    )
 
     def _dotp(lv, rv):
         return (
@@ -317,10 +298,6 @@ def lsh_bucketed_pairs(
 
 def ivf_train_step_flat(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    round_to: int = 6,
     centroids: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """One Lloyd (k-means) iteration — the IVF TRAINING step that
@@ -345,15 +322,15 @@ def ivf_train_step_flat(
     if centroids is None:
         centroids = [
             (int(r[0]), list(r[1]))
-            for r in embeddings.where(F.col(id_col) < n_centroids)
-            .select(id_col, vec_col)
+            for r in embeddings.where(F.col(ID_COL) < N_CENTROIDS)
+            .select(ID_COL, VEC_COL)
             .collect()
         ]
     centroids = sorted(centroids)
     # Arrow-batched numpy assignment (guide §4.2), vec passthrough
     # for the element-wise mean; the posexplode stays JVM-side.
     assigned = _ivf_assign_relation(
-        embeddings, centroids, id_col, vec_col, keep_vec=True
+        embeddings, centroids, keep_vec=True
     ).select("cell", F.posexplode(F.col("_vec")).alias("pos", "x"))
     return (
         assigned.groupBy("cell", "pos")
@@ -362,56 +339,51 @@ def ivf_train_step_flat(
             "cell",
             F.col("c").alias("n_members"),
             "pos",
-            F.round("m", round_to).alias("value"),
+            F.round("m", 6).alias("value"),
         )
     )
 
 
 def pq_seed_codebooks(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_codes: int = 16,
-    m: int = 4,
 ) -> list[list[tuple[int, list[float]]]]:
-    """Per-subspace PQ codebooks seeded from the first ``n_codes``
+    """Per-subspace PQ codebooks seeded from the first PQ_CODES
     vectors' subvectors (deterministic, oracle-reproducible — the same
     seeding convention ivf_topk uses for its centroids; production
     would k-means each subspace with ivf_train_step_flat on the sliced
-    column). Returns m lists of (code, subvector); the whole structure
-    is m x n_codes x (dim/m) floats — e.g. 4 KiB at dim 64 — so it
-    rides into every task as a plan literal, never a join."""
+    column). Returns PQ_M lists of (code, subvector); the whole
+    structure is PQ_M x PQ_CODES x (dim/PQ_M) floats — e.g. 4 KiB at
+    dim 64 — so it rides into every task as a plan literal, never a
+    join."""
     seeds = sorted(
         (int(r[0]), list(r[1]))
-        for r in embeddings.where(F.col(id_col) < n_codes)
-        .select(id_col, vec_col)
+        for r in embeddings.where(F.col(ID_COL) < PQ_CODES)
+        .select(ID_COL, VEC_COL)
         .collect()
     )
-    return pq_codebooks_from_seeds(seeds, m)
+    return pq_codebooks_from_seeds(seeds)
 
 
 def pq_codebooks_from_seeds(
-    seeds: list[tuple[int, list[float]]], m: int = 4
+    seeds: list[tuple[int, list[float]]]
 ) -> list[list[tuple[int, list[float]]]]:
     """Slice already-collected seed vectors (the same (id, vec) list the
     IVF queries collect once via their seed helper) into per-subspace
     codebooks — so one driver collect can feed IVF centroids AND PQ
     codebooks without a second scan."""
     dim = len(seeds[0][1])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
+    if dim % PQ_M:
+        raise ValueError(f"dim {dim} not divisible by m={PQ_M}")
+    sub = dim // PQ_M
     return [
         [(c, v[j * sub : (j + 1) * sub]) for c, v in seeds]
-        for j in range(m)
+        for j in range(PQ_M)
     ]
 
 
 def pq_encode(
     embeddings: DataFrame,
     codebooks: list[list[tuple[int, list[float]]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """PQ-encode the corpus: (id, codes array<long>, _recon) — codes is
     the m-byte compressed representation (the 100 TB artifact: dim
@@ -436,12 +408,12 @@ def pq_encode(
     pq_tables = _pq_tables_np(codebooks)
     schema = StructType(
         [
-            StructField(id_col, embeddings.schema[id_col].dataType),
+            StructField(ID_COL, embeddings.schema[ID_COL].dataType),
             StructField("codes", ArrayType(LongType())),
             StructField("_recon", ArrayType(DoubleType())),
         ]
     )
-    src = embeddings.select(id_col, F.col(vec_col).alias("_vec"))
+    src = embeddings.select(ID_COL, F.col(VEC_COL).alias("_vec"))
 
     def gen(batches):
         import pandas as pd
@@ -449,11 +421,11 @@ def pq_encode(
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = _np_stack_vecs(pdf["_vec"], vec_col)
+            V = _np_stack_vecs(pdf["_vec"], VEC_COL)
             codes, recon = _np_pq_encode(V, pq_tables)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    ID_COL: pdf[ID_COL],
                     "codes": list(codes),
                     "_recon": list(recon),
                 }
@@ -464,12 +436,6 @@ def pq_encode(
 
 def pq_adc_topk(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_query_vecs: int = 5,
-    n_codes: int = 16,
-    m: int = 4,
     codebooks: list[list[tuple[int, list[float]]]] | None = None,
 ) -> DataFrame:
     """PQ + asymmetric-distance top-k (Jegou et al., "Product
@@ -482,20 +448,18 @@ def pq_adc_topk(
     — identical to brute_force_topk but over a corpus that at scale is
     read as m bytes per vector instead of dim floats.
 
-    Output: (query_id, neighbor_id, adc_dist, rank), rank 1..k by
+    Output: (query_id, neighbor_id, adc_dist, rank), rank 1..TOP_K by
     ascending rounded distance, ties to the lower neighbor id.
     """
     from pyspark.sql import Window as W
 
     if codebooks is None:
-        codebooks = pq_seed_codebooks(
-            embeddings, id_col, vec_col, n_codes=n_codes, m=m
-        )
-    enc = pq_encode(embeddings, codebooks, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), "_recon"
+        codebooks = pq_seed_codebooks(embeddings)
+    enc = pq_encode(embeddings, codebooks).select(
+        F.col(ID_COL).alias("neighbor_id"), "_recon"
     )
-    q = embeddings.where(F.col(id_col) < n_query_vecs).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
+    q = embeddings.where(F.col(ID_COL) < N_QUERY_VECS).select(
+        F.col(ID_COL).alias("query_id"), F.col(VEC_COL).alias("_qvec")
     )
     pairs = enc.crossJoin(F.broadcast(q)).where(
         F.col("neighbor_id") != F.col("query_id")
@@ -516,15 +480,13 @@ def pq_adc_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
     )
 
 
 def semantic_keep_best(
     embeddings: DataFrame,
     centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Cluster-based semantic dedup: assign every vector to its nearest
     centroid cell map-side (same argmax/tie rules as IVF serving) and
@@ -543,7 +505,7 @@ def semantic_keep_best(
     from pyspark.sql import Window as W
 
     assigned = _ivf_assign_relation(
-        embeddings, sorted(centroids), id_col, vec_col, with_sim=True
+        embeddings, sorted(centroids), with_sim=True
     ).select(
         "_id",
         "cell",
@@ -572,16 +534,11 @@ def ivfpq_topk(
     embeddings: DataFrame,
     centroids: list[tuple[int, list[float]]],
     codebooks: list[list[tuple[int, list[float]]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_query_vecs: int = 5,
-    n_probe: int = 4,
 ) -> DataFrame:
     """IVF cells over PQ codes — the standard billion-vector serving
     layout (IVFADC, Jegou et al. 2011): the corpus partitions into
     coarse centroid cells AND compresses to m-byte PQ codes; a query
-    probes its n_probe nearest cells and ADC-rescores only those
+    probes its N_PROBE nearest cells and ADC-rescores only those
     candidates against its full-precision vector.
 
     Plan shape: cell assignment and PQ reconstruction are ONE narrow
@@ -589,7 +546,7 @@ def ivfpq_topk(
     this is the index build artifact: (cell, codes) per vector, read
     as a cell-pruned scan of m bytes/vector); the probe set
     broadcasts; the only shuffle is the final per-query top-k window.
-    Candidates drop from N to ~N*n_probe/n_cells and candidate bytes
+    Candidates drop from N to ~N*N_PROBE/n_cells and candidate bytes
     from dim floats to m codes — the two savings multiply.
     """
     from pyspark.sql import Window as W
@@ -598,17 +555,13 @@ def ivfpq_topk(
     assigned = _ivf_assign_relation(
         embeddings,
         sorted(centroids),
-        id_col,
-        vec_col,
         out_id="neighbor_id",
         codebooks=codebooks,
     )
     probes = _ivf_probe_relation(
-        embeddings.where(F.col(id_col) < n_query_vecs),
+        embeddings.where(F.col(ID_COL) < N_QUERY_VECS),
         sorted(centroids),
-        n_probe,
-        id_col,
-        vec_col,
+        N_PROBE,
     )
     scored = _pairwise_score_relation(
         assigned.join(F.broadcast(probes), "cell")
@@ -628,18 +581,14 @@ def ivfpq_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
     )
 
 
 # -------------------------------------------------- int8 quantization
 
 
-def int8_quantize(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def int8_quantize(embeddings: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 scalar quantization: scale =
     max|x|/127, q_i = floor(x_i/scale + 0.5) (explicit half-up — the
     one rounding spelling Spark and DuckDB share bit-for-bit).
@@ -650,9 +599,9 @@ def int8_quantize(
     projection (the scale is a materialized column, NOT a subtree, so
     the per-element lambda reads a slot instead of re-evaluating the
     array max per element)."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = F.transform(F.col(VEC_COL), lambda x: x.cast("double"))
     with_scale = embeddings.select(
-        F.col(id_col).alias("_qid"),
+        F.col(ID_COL).alias("_qid"),
         v.alias("_v"),
         (
             F.array_max(F.transform(v, lambda x: F.abs(x))) / F.lit(127.0)
@@ -668,18 +617,12 @@ def int8_quantize(
         )
     )
     return with_scale.select(
-        F.col("_qid").alias(id_col), "scale", qvec.alias("qvec")
+        F.col("_qid").alias(ID_COL), "scale", qvec.alias("qvec")
     )
 
 
-def int8_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-) -> DataFrame:
-    """Approximate top-k by quantized dot product: score =
+def int8_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
+    """Approximate top-TOP_K by quantized dot product: score =
     (Σ qa_i·qb_i) · scale_a · scale_b — the integer sum is EXACT in
     both engines, the two scale multiplies are the only floats, so
     the ranking replays bit-identically in a SQL oracle.
@@ -691,13 +634,13 @@ def int8_topk(
     the hot loop is int multiply-add."""
     from pyspark.sql import Window as W
 
-    qq = int8_quantize(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"),
+    qq = int8_quantize(queries).select(
+        F.col(ID_COL).alias("query_id"),
         F.col("scale").alias("_qs"),
         F.col("qvec").alias("_qq"),
     )
-    cc = int8_quantize(embeddings, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
+    cc = int8_quantize(embeddings).select(
+        F.col(ID_COL).alias("neighbor_id"),
         F.col("scale").alias("_cs"),
         F.col("qvec").alias("_cq"),
     )
@@ -724,15 +667,11 @@ def int8_topk(
     )
     return (
         sim.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
     )
 
 
-def binary_quantize(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def binary_quantize(embeddings: DataFrame) -> DataFrame:
     """Sign binarization after per-ROW mean centering: bit i is set
     iff x_i - mean(x) >= 0, packed 64 dims per long word.
 
@@ -745,9 +684,9 @@ def binary_quantize(
     downstream candidate scoring is XOR+popcount over 1/32 of the
     float bytes. Word packing is bitwiseOR of distinct single-bit
     values — no addition, so it is ANSI-safe including bit 63."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = F.transform(F.col(VEC_COL), lambda x: x.cast("double"))
     with_mu = embeddings.select(
-        F.col(id_col).alias("_bid"),
+        F.col(ID_COL).alias("_bid"),
         v.alias("_v"),
         (
             F.aggregate(
@@ -782,7 +721,7 @@ def binary_quantize(
         ),
     )
     return with_mu.select(
-        F.col("_bid").alias(id_col),
+        F.col("_bid").alias(ID_COL),
         F.size(F.col("_v")).alias("dim"),
         words.alias("words"),
     )
@@ -803,8 +742,6 @@ def hamming_words(a: Column, b: Column) -> Column:
 def binary_hamming_topk(
     embeddings: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
     """Approximate top-k by Hamming distance over the binary codes.
@@ -817,11 +754,11 @@ def binary_hamming_topk(
     float multiplies."""
     from pyspark.sql import Window as W
 
-    q = binary_quantize(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("words").alias("_qw")
+    q = binary_quantize(queries).select(
+        F.col(ID_COL).alias("query_id"), F.col("words").alias("_qw")
     )
-    c = binary_quantize(embeddings, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("words").alias("_cw")
+    c = binary_quantize(embeddings).select(
+        F.col(ID_COL).alias("neighbor_id"), F.col("words").alias("_cw")
     )
     sim = (
         c.crossJoin(F.broadcast(q))
@@ -841,33 +778,26 @@ def binary_hamming_topk(
     )
 
 
-def binary_rerank_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    prefilter_mult: int = 4,
-) -> DataFrame:
+def binary_rerank_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
     """The binary-quantization SERVING pattern: Hamming prefilter to
-    k * prefilter_mult candidates per query, then exact cosine
-    rerank of only those candidates back against the float vectors.
+    4 * TOP_K candidates per query, then exact cosine rerank of only
+    those candidates back against the float vectors.
 
-    Output: (query_id, neighbor_id, cosine_sim, rank), rank 1..k by
+    Output: (query_id, neighbor_id, cosine_sim, rank), rank 1..TOP_K by
     (cosine desc, neighbor id). At 100 TB the first stage scans the
     32x-compacted code corpus; the float vectors are fetched for
-    ~k*mult rows per query via an equi-join on neighbor id — the
+    ~4 * TOP_K rows per query via an equi-join on neighbor id — the
     crossJoin never touches the float table."""
     from pyspark.sql import Window as W
 
-    cand = binary_hamming_topk(
-        embeddings, queries, id_col, vec_col, k=k * prefilter_mult
-    ).select("query_id", "neighbor_id")
+    cand = binary_hamming_topk(embeddings, queries, k=TOP_K * 4).select(
+        "query_id", "neighbor_id"
+    )
     qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
+        F.col(ID_COL).alias("query_id"), F.col(VEC_COL).alias("_qvec")
     )
     cv = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec")
+        F.col(ID_COL).alias("neighbor_id"), F.col(VEC_COL).alias("_cvec")
     )
     scored = (
         cand.join(F.broadcast(qv), "query_id")
@@ -885,7 +815,7 @@ def binary_rerank_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
     )
 
 
@@ -1058,8 +988,6 @@ def _np_pq_encode(V, pq_tables):
 def _ivf_assign_relation(
     df: DataFrame,
     centroids: list[tuple[int, list[float]]],
-    id_col: str,
-    vec_col: str,
     *,
     out_id: str = "_id",
     out_vec: str = "_vec",
@@ -1087,9 +1015,9 @@ def _ivf_assign_relation(
     pq_tables = _pq_tables_np(codebooks) if codebooks is not None else None
     k = len(centroids)
 
-    fields = [StructField(out_id, df.schema[id_col].dataType)]
+    fields = [StructField(out_id, df.schema[ID_COL].dataType)]
     if keep_vec:
-        fields.append(StructField(out_vec, df.schema[vec_col].dataType))
+        fields.append(StructField(out_vec, df.schema[VEC_COL].dataType))
     fields.append(StructField("cell", LongType()))
     if with_sim:
         fields.append(StructField("_sim", DoubleType()))
@@ -1097,9 +1025,7 @@ def _ivf_assign_relation(
         fields.append(StructField("_c2", DoubleType()))
     if pq_tables is not None:
         fields.append(StructField("_recon", ArrayType(DoubleType())))
-    src = df.select(
-        F.col(id_col).alias(out_id), F.col(vec_col).alias(out_vec)
-    )
+    src = df.select(F.col(ID_COL).alias(out_id), F.col(VEC_COL).alias(out_vec))
 
     def gen(batches):
         import numpy as np
@@ -1108,7 +1034,7 @@ def _ivf_assign_relation(
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = _np_stack_vecs(pdf[out_vec], vec_col)
+            V = _np_stack_vecs(pdf[out_vec], VEC_COL)
             cos = _np_cos_matrix(V, cids, C, cnorms)
             keys = _np_dkeys(cos)
             rows = np.arange(len(pdf))
@@ -1142,13 +1068,8 @@ def _ivf_probe_relation(
     df: DataFrame,
     centroids: list[tuple[int, list[float]]],
     n_probe: int,
-    id_col: str,
-    vec_col: str,
-    *,
-    out_id: str = "query_id",
-    out_vec: str = "_qvec",
 ) -> DataFrame:
-    """(out_id, out_vec, cell) — the exploded n_probe nearest-centroid
+    """(query_id, _qvec, cell) — the exploded n_probe nearest-centroid
     rows per query (cos DESC, cid ASC)."""
     from pyspark.sql.types import LongType, StructField, StructType
 
@@ -1160,13 +1081,13 @@ def _ivf_probe_relation(
 
     schema = StructType(
         [
-            StructField(out_id, df.schema[id_col].dataType),
-            StructField(out_vec, df.schema[vec_col].dataType),
+            StructField("query_id", df.schema[ID_COL].dataType),
+            StructField("_qvec", df.schema[VEC_COL].dataType),
             StructField("cell", LongType()),
         ]
     )
     src = df.select(
-        F.col(id_col).alias(out_id), F.col(vec_col).alias(out_vec)
+        F.col(ID_COL).alias("query_id"), F.col(VEC_COL).alias("_qvec")
     )
 
     def gen(batches):
@@ -1176,14 +1097,14 @@ def _ivf_probe_relation(
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = _np_stack_vecs(pdf[out_vec], vec_col)
+            V = _np_stack_vecs(pdf["_qvec"], VEC_COL)
             keys = _np_dkeys(_np_cos_matrix(V, cids, C, cnorms))
             order = np.argsort(~keys, axis=1, kind="stable")[:, :n_probe]
             idx = np.repeat(np.arange(len(pdf)), n_probe)
             yield pd.DataFrame(
                 {
-                    out_id: pdf[out_id].iloc[idx].to_numpy(),
-                    out_vec: pdf[out_vec].iloc[idx].to_numpy(),
+                    "query_id": pdf["query_id"].iloc[idx].to_numpy(),
+                    "_qvec": pdf["_qvec"].iloc[idx].to_numpy(),
                     "cell": cids[order.reshape(-1)],
                 }
             )
@@ -1321,8 +1242,6 @@ def _pairwise_score_relation(
 def ivf_cell_report(
     embeddings: DataFrame,
     centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF index-quality report: per cell (the argmax-cosine
     assignment, same tie-break as ivf_topk — cos DESC, cid ASC),
@@ -1340,8 +1259,6 @@ def ivf_cell_report(
     top2 = _ivf_assign_relation(
         embeddings,
         sorted(centroids),
-        id_col,
-        vec_col,
         with_sim=True,
         top2=True,
     ).select(

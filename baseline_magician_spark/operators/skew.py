@@ -6,17 +6,17 @@ two shapes still need explicit salting:
 - **salted_join**: when a replicated (broadcast-sized) dimension joins
   a fact table whose join key is pathologically hot (e.g. event_type
   with 5 values over 10^11 rows), pre-salting spreads each hot key
-  over ``n_salts`` shuffle partitions: facts derive a deterministic
+  over JOIN_SALTS shuffle partitions: facts derive a deterministic
   salt from the full row hash, the dimension replicates once per salt,
-  and the join key becomes (key, salt). Results are EXACTLY the plain
+  and the inner join key becomes (key, salt). Results are EXACTLY the plain
   join's (each fact row meets exactly one replica), so the DuckDB
   oracle is the unsalted join.
 
 - **salted_distinct_count**: count(DISTINCT v) on a hot group key
-  cannot partial-aggregate. Salting by ``hash(v) % S`` partitions the
-  VALUE space, so per-(group, salt) distinct counts sum exactly to the
-  group's distinct count — two ordinary hash aggregations, no giant
-  per-group state.
+  cannot partial-aggregate. Salting by ``hash(v) % DISTINCT_SALTS``
+  partitions the VALUE space, so per-(group, salt) distinct counts
+  sum exactly to the group's distinct count — two ordinary hash
+  aggregations, no giant per-group state.
 """
 
 from __future__ import annotations
@@ -25,42 +25,28 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_join(
-    facts: DataFrame,
-    dim: DataFrame,
-    key: str,
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    if how not in ("inner", "left", "left_outer", "leftouter", "left_semi",
-                   "leftsemi", "left_anti", "leftanti"):
-        # the dim side is replicated n_salts times: right/full outer
-        # would emit one row PER UNMATCHED REPLICA (n_salts duplicates
-        # of every unmatched dim key), breaking plain-join equivalence
-        raise ValueError(
-            f"salted_join supports inner/left/semi/anti, not {how!r} — "
-            "an outer side on the replicated dim duplicates unmatched keys"
-        )
+JOIN_SALTS = 8
+DISTINCT_SALTS = 32
+
+
+def salted_join(facts: DataFrame, dim: DataFrame, key: str) -> DataFrame:
     f = facts.withColumn(
-        "_salt", F.pmod(F.xxhash64(*facts.columns), F.lit(n_salts))
+        "_salt", F.pmod(F.xxhash64(*facts.columns), F.lit(JOIN_SALTS))
     )
     d = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(JOIN_SALTS - 1)))
     )
-    return f.join(d, [key, "_salt"], how).drop("_salt")
+    return f.join(d, [key, "_salt"]).drop("_salt")
 
 
 def salted_distinct_count(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    n_salts: int = 32,
-    out_col: str | None = None,
+    df: DataFrame, group_cols: list[str], value_col: str
 ) -> DataFrame:
-    out_col = out_col or f"distinct_{value_col}"
-    salt = F.pmod(F.xxhash64(value_col), F.lit(n_salts))
+    salt = F.pmod(F.xxhash64(value_col), F.lit(DISTINCT_SALTS))
     per_salt = (
         df.groupBy(*group_cols, salt.alias("_salt"))
         .agg(F.countDistinct(value_col).alias("_d"))
     )
-    return per_salt.groupBy(*group_cols).agg(F.sum("_d").alias(out_col))
+    return per_salt.groupBy(*group_cols).agg(
+        F.sum("_d").alias(f"distinct_{value_col}")
+    )

@@ -38,8 +38,8 @@ def punct_count(text_col: Column | str) -> Column:
     return F.regexp_count(c, F.lit(PUNCT_PATTERN))
 
 
-def stopword_count(text_col: Column | str, stopwords=STOPWORDS) -> Column:
-    sw = F.array(*[F.lit(s) for s in stopwords])
+def stopword_count(text_col: Column | str) -> Column:
+    sw = F.array(*[F.lit(s) for s in STOPWORDS])
     return F.size(
         F.filter(tokens(text_col), lambda t: F.array_contains(sw, F.lower(t)))
     )
@@ -108,14 +108,14 @@ def normalized_fingerprint(text_col: Column | str) -> Column:
     return poly_hash(norm)
 
 
-def winnow_min_shingle(text_col: Column | str, n: int = 3) -> Column:
+def winnow_min_shingle(text_col: Column | str) -> Column:
     """Winnowing-style robust fingerprint: min shingle hash."""
-    return F.array_min(shingle_hashes(text_col, n))
+    return F.array_min(shingle_hashes(text_col, 3))
 
 
-def register_ngrams_udtf(spark, name: str = "ngrams_udtf", n: int = 2):
+def register_ngrams_udtf(spark, name: str = "ngrams_udtf"):
     """Python UDTF (SURVEY §2.10 — UDTF surface, ABSENT in the
-    reference): one row per token n-gram with its position, usable as a
+    reference): one row per token bigram with its position, usable as a
     lateral table function in SQL:
 
         SELECT d.doc_id, g.ngram, g.pos
@@ -132,8 +132,8 @@ def register_ngrams_udtf(spark, name: str = "ngrams_udtf", n: int = 2):
     class NGrams:
         def eval(self, text: str):  # noqa: ANN001 - UDTF contract
             toks = [t for t in (text or "").split() if t]
-            for i in range(len(toks) - n + 1):
-                yield " ".join(toks[i : i + n]), i
+            for i in range(len(toks) - 1):
+                yield " ".join(toks[i : i + 2]), i
 
     spark.udtf.register(name, NGrams)
     return NGrams
@@ -169,6 +169,11 @@ def repetition_stats(text_col: Column | str) -> list[Column]:
     ]
 
 
+# Count-min sketch size: CMS_DEPTH hash rows x CMS_WIDTH buckets.
+CMS_DEPTH = 4
+CMS_WIDTH = 1024
+
+
 def cms_cells(c: Column, depth: int, width: int) -> Column:
     """The (row, bucket) cell array of a key — THE one definition of
     the CMS hash family, shared by the batch sketch, the streaming
@@ -189,15 +194,10 @@ def cms_cells(c: Column, depth: int, width: int) -> Column:
     )
 
 
-def count_min_sketch(
-    keys: "DataFrame",
-    key_col: str = "s",
-    depth: int = 4,
-    width: int = 1024,
-    weight_col: str | None = None,
-):
-    """Count-min sketch of a key stream as a (depth x width) count
-    table: one exploded projection (depth rows per key, map-side) and
+def count_min_sketch(keys: "DataFrame", weight_col: str | None = None):
+    """Count-min sketch of the key column ``s`` as a (CMS_DEPTH x
+    CMS_WIDTH) count table: one exploded projection (CMS_DEPTH rows
+    per key, map-side) and
     ONE shuffle on the uniform (row, bucket) pair — the mergeable
     sketch shape (sketches of partitions/days add cell-wise).
 
@@ -209,18 +209,18 @@ def count_min_sketch(
     top-k without re-reading the corpus.
 
     Returns (sketch_df, probe) where ``sketch_df`` is
-    (row, bucket, cnt) — depth*width rows, broadcastable — and
+    (row, bucket, cnt) — CMS_DEPTH*CMS_WIDTH rows, broadcastable — and
     ``probe(df, col)`` attaches ``cms_estimate`` = min over rows of the
     key's cell, the classic never-underestimating point query.
     """
     from pyspark.sql import DataFrame  # noqa: F401 (typing only)
 
     def cells(c):
-        return cms_cells(c, depth, width)
+        return cms_cells(c, CMS_DEPTH, CMS_WIDTH)
 
     w = F.col(weight_col) if weight_col else F.lit(1)
     sketch = (
-        keys.select(F.explode(cells(F.col(key_col))).alias("c"), w.alias("_w"))
+        keys.select(F.explode(cells(F.col("s"))).alias("c"), w.alias("_w"))
         .groupBy(F.col("c.row").alias("row"), F.col("c.bucket").alias("bucket"))
         .agg(F.sum("_w").alias("cnt"))
     )
@@ -283,13 +283,8 @@ def redact_pii(text_col: Column | str) -> Column:
     return c
 
 
-def tfidf_top_terms(
-    docs: "DataFrame",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-) -> "DataFrame":
-    """Top-k TF-IDF terms per document — the classic salient-term
+def tfidf_top_terms(docs: "DataFrame") -> "DataFrame":
+    """Top-3 TF-IDF terms per document — the classic salient-term
     extractor (retrieval indexing, topic labeling, keyword features).
 
     Plan shape — the corpus is tokenized EXACTLY ONCE (a naive
@@ -315,10 +310,10 @@ def tfidf_top_terms(
 
     from ..functions.hashing import tokens
 
-    term = F.explode(tokens(F.lower(F.col(text_col)))).alias("term")
+    term = F.explode(tokens(F.lower(F.col("text")))).alias("term")
     tf = (
-        docs.select(F.col(id_col), term)
-        .groupBy(id_col, "term")
+        docs.select(F.col("doc_id"), term)
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -339,13 +334,13 @@ def tfidf_top_terms(
             ),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("tfidf").desc(), F.col("term").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(id_col, "rank", "term", "tf", "df", "tfidf")
+        .where(F.col("rank") <= 3)
+        .select("doc_id", "rank", "term", "tf", "df", "tfidf")
     )
 
 
@@ -422,53 +417,52 @@ def gopher_quality_flags(text_col: Column | str) -> list[Column]:
     ]
 
 
-def dsir_importance_weights(
-    docs,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    target_col=None,
-    n_buckets: int = 512,
-    scale: int = 1_000_000,
-):
+# DSIR feature buckets, and the micro-nat quantization of each
+# bucket's log-ratio.
+DSIR_BUCKETS = 512
+DSIR_SCALE = 1_000_000
+
+
+def dsir_importance_weights(docs):
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): score each raw
     document by the log-likelihood ratio of its hashed token features
     under a bag-of-features model of the TARGET distribution vs the
     RAW distribution, with add-one smoothing.
 
-    Output: (id_col, n_feats, dsir_score_micro) where
+    The target distribution is the English (``lang = 'en'``) documents.
+
+    Output: (doc_id, n_feats, dsir_score_micro) where
     ``dsir_score_micro = Σ_f round(1e6 * [ln p_t(f) - ln p_r(f)])``
     over the document's feature occurrences.
 
     Numerical design: the per-BUCKET log-ratio is quantized to an
-    integer (micro-nats) once — n_buckets values total — and the
+    integer (micro-nats) once — DSIR_BUCKETS values total — and the
     per-document score is an INTEGER sum of those, so the result is
     exactly reproducible across engines and partitionings (float
     summation order never enters; the only cross-engine surface is
     one ln() per bucket, quantized).
 
     Plan shape (100 TB): one tokenize+hash pass over the corpus feeds
-    both the bucket table (n_buckets rows — broadcast) and the per-doc
+    both the bucket table (DSIR_BUCKETS rows — broadcast) and the per-doc
     sum; shuffles are the tiny bucket aggregation and one uniform
     doc-id groupBy.
     """
     from ..cache_tracker import track
     from ..functions.hashing import poly_hash, tokens
 
-    if target_col is None:
-        target_col = F.col("lang") == "en"
     # the feature relation feeds the bucket table AND the per-doc
     # score join — without the (tracker-released) persist each
     # consumer re-runs the tokenize + interpreted per-char poly_hash
     # pass (6 parquet scans in the round-12 before-plan)
     feats = track(
         docs.select(
-            F.col(id_col),
-            target_col.cast("int").alias("_is_t"),
-            F.explode(tokens(text_col)).alias("_tok"),
+            F.col("doc_id"),
+            (F.col("lang") == "en").cast("int").alias("_is_t"),
+            F.explode(tokens("text")).alias("_tok"),
         )
         .select(
-            id_col, "_is_t", (poly_hash("_tok") % n_buckets).alias("_b")
+            "doc_id", "_is_t", (poly_hash("_tok") % DSIR_BUCKETS).alias("_b")
         )
         .persist()
     )
@@ -485,21 +479,21 @@ def dsir_importance_weights(
             (
                 F.log(
                     (F.col("_ct_t") + 1).cast("double")
-                    / (F.col("_n_t") + n_buckets).cast("double")
+                    / (F.col("_n_t") + DSIR_BUCKETS).cast("double")
                 )
                 - F.log(
                     (F.col("_ct_r") + 1).cast("double")
-                    / (F.col("_n_r") + n_buckets).cast("double")
+                    / (F.col("_n_r") + DSIR_BUCKETS).cast("double")
                 )
             )
-            * scale
+            * DSIR_SCALE
         )
         .cast("long")
         .alias("_s"),
     )
     return (
         feats.join(F.broadcast(scores), "_b")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_feats"),
             F.sum("_s").alias("dsir_score_micro"),
@@ -507,12 +501,8 @@ def dsir_importance_weights(
     )
 
 
-def token_entropy(
-    docs: "DataFrame",
-    text_col: str = "text",
-    group_col: str = "lang",
-) -> "DataFrame":
-    """Per-group Shannon entropy of the token distribution — the
+def token_entropy(docs: "DataFrame") -> "DataFrame":
+    """Per-``lang`` Shannon entropy of the token distribution — the
     corpus-diversity diagnostic a training-mix designer reads before
     setting sampling temperatures (low-entropy groups are templated/
     repetitive; entropy-per-language also flags mislabeled crawl
@@ -531,9 +521,9 @@ def token_entropy(
     """
     from pyspark.sql import DataFrame  # noqa: F401
 
-    term = F.explode(tokens(F.lower(F.col(text_col)))).alias("term")
+    term = F.explode(tokens(F.lower(F.col("text")))).alias("term")
     counts = (
-        docs.select(F.col(group_col).alias("grp"), term)
+        docs.select(F.col("lang").alias("grp"), term)
         .groupBy("grp", "term")
         .agg(F.count(F.lit(1)).alias("c"))
     )

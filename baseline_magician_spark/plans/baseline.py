@@ -73,7 +73,10 @@ def cast_to_uint(c: Column) -> Column:
     """Parity rule for the reference's cast_to_uint (main.go:468-477):
     float64 -> unsigned truncation; anything unexpected (null) -> 0.
     Negative inputs also map to 0 (documented divergence from Go's
-    platform-defined uint(negative) wrap — strict-correct choice)."""
+    platform-defined uint(negative) wrap — strict-correct choice).
+    NaN maps to 0, and +Inf or anything at or above 2^63 saturates to
+    2^63 - 1 (Spark's floor(double) -> bigint): a divergence too, as
+    Go's uint(+Inf) is platform-defined."""
     return (
         F.when(c.isNull() | (c < 0), F.lit(0)).otherwise(F.floor(c)).cast("long")
     )
@@ -125,7 +128,7 @@ def baseline_aggregate(
     else:
         with_ip = metrics.withColumn("_ip_long", ip4_to_long(host_col))
     join = bucketed_range_join if use_bucketed_join else broadcast_range_join
-    joined = join(with_ip, networks, ip_col="_ip_long")
+    joined = join(with_ip, networks)
 
     aggs = [F.count(F.lit(1)).alias("samples")] + [
         F.floor(agg_fn(c)).cast("long").alias(c) for c in metric_cols
@@ -180,9 +183,9 @@ def compile_channel_expressions(sources: dict[str, str]) -> dict[str, Expression
 def apply_thresholds(
     aggregated: DataFrame,
     expressions: dict[str, ExpressionFn],
-    channels: tuple[ThresholdChannel, ...] = REFERENCE_CHANNELS,
 ) -> DataFrame:
-    """Apply per-channel threshold expressions.
+    """Apply per-channel threshold expressions to the six
+    REFERENCE_CHANNELS.
 
     ``expressions`` maps channel name -> fn(value Column) -> Column,
     mirroring the govaluate expression with parameter `value`
@@ -192,7 +195,7 @@ def apply_thresholds(
     division -> zero deactivates the flag.
     """
     out = aggregated
-    for ch in channels:
+    for ch in REFERENCE_CHANNELS:
         fn = expressions.get(ch.name)
         if fn is None or ch.source_col not in aggregated.columns:
             out = out.withColumn(ch.threshold_col, F.lit(0).cast("long"))

@@ -59,5 +59,4 @@ def asof_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_ts="o_orderdate",
         value_cols=["o_orderkey", "o_totalprice"],
         right_order="o_orderkey",
-        how="inner",
     )

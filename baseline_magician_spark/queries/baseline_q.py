@@ -15,7 +15,7 @@ The DuckDB oracle is generated from the SAME channel/metric specs by
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -67,6 +67,12 @@ def _column_expressions():
     return compile_channel_expressions(CHANNEL_EXPRS)
 
 
+def ip_expr_from_user_id() -> Column:
+    """The events->host adapter's deterministic user->ip mapping:
+    IP_BASE + (user_id * IP_SPREAD) % 65536."""
+    return F.lit(IP_BASE) + (F.col("user_id") * F.lit(IP_SPREAD)) % F.lit(65536)
+
+
 def events_as_host_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adapter: events -> host_metrics-shaped fact frame.
 
@@ -76,7 +82,7 @@ def events_as_host_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     now_df = ev.agg(F.max("ts").alias("now_ts"))
-    ip_long = F.lit(IP_BASE) + (F.col("user_id") * F.lit(IP_SPREAD)) % F.lit(65536)
+    ip_long = ip_expr_from_user_id()
     cols = [
         long_to_ip4(ip_long).alias("host"),
         # carry the numeric form too: the plan's range join uses it

@@ -22,17 +22,15 @@ from pyspark.sql import functions as F
 from ..catalog import load_for_compute
 from ..functions.hashing import tokens_duckdb
 from ..operators.bpe import bpe_train, bpe_vocab, doc_token_counts
-from ..operators.packing import pack_sequences
+from ..operators.packing import CTX_LEN, N_BUCKETS, pack_sequences
 from ..registry import query
 
 N_MERGES = 16
-PACK_CTX_LEN = 512
-PACK_BUCKETS = 8
 
 _TOK = tokens_duckdb("text")
 
 
-def _train_cte(n: int = N_MERGES) -> str:
+def _train_cte() -> str:
     """The shared chained-CTE training replay: ``v0`` is the
     symbolized vocab relation; each rank adds ``p{i}`` (weighted
     adjacent-pair counts), ``m{i}`` (argmax pair, ties lexicographic
@@ -49,7 +47,7 @@ def _train_cte(n: int = N_MERGES) -> str:
       GROUP BY word
     )"""
     ]
-    for i in range(1, n + 1):
+    for i in range(1, N_MERGES + 1):
         p = i - 1
         parts.append(
             f"""
@@ -201,7 +199,7 @@ def _packing_oracle() -> str:
     wl AS (SELECT word, CAST(len(syms) AS BIGINT) AS n_bpe
            FROM v{N_MERGES}),
     t AS (
-      SELECT doc_id, doc_id % {PACK_BUCKETS} AS bucket,
+      SELECT doc_id, doc_id % {N_BUCKETS} AS bucket,
              CAST(sum(n_bpe) AS BIGINT) AS n_tok
       FROM (SELECT doc_id, unnest({_TOK}) AS word FROM documents)
       JOIN wl USING (word)
@@ -217,8 +215,8 @@ def _packing_oracle() -> str:
       FROM nz
     )
     SELECT doc_id, bucket, n_tok, start_offset,
-           start_offset // {PACK_CTX_LEN} AS chunk_start,
-           (start_offset + n_tok - 1) // {PACK_CTX_LEN} AS chunk_end
+           start_offset // {CTX_LEN} AS chunk_start,
+           (start_offset + n_tok - 1) // {CTX_LEN} AS chunk_end
     FROM w
     """
     )
@@ -249,9 +247,4 @@ def pipeline_packing_exact_tokens(
         merges,
         word_lens=word_token_counts(state.select("word"), merges),
     )
-    return pack_sequences(
-        counts,
-        F.col("n_tok_exact"),
-        ctx_len=PACK_CTX_LEN,
-        n_buckets=PACK_BUCKETS,
-    )
+    return pack_sequences(counts, F.col("n_tok_exact"))

@@ -2177,8 +2177,8 @@ ORDER BY etype, x
 """
 
 
-def _lttb_oracle(k: int = 12) -> str:
-    nb = k - 2
+def _lttb_oracle() -> str:
+    nb = 12 - 2
     # area(prev p, candidate b, next anchor a) — operand order mirrors
     # functions/ch_compat._lttb.area exactly
     area = (
@@ -2227,7 +2227,7 @@ def _lttb_oracle(k: int = 12) -> str:
       JOIN (SELECT unnest(generate_series(1, {nb})) AS i) g
         ON o.rn >= 2 + floor((g.i - 1) * (o.n - 2) / {float(nb)})
        AND o.rn <= 1 + floor(g.i * (o.n - 2) / {float(nb)})
-      WHERE o.n > {k}
+      WHERE o.n > {12}
     ),
     centroids AS (
       SELECT etype, i,
@@ -2235,8 +2235,8 @@ def _lttb_oracle(k: int = 12) -> str:
              sum(y) / count(*) AS cy
       FROM buckets GROUP BY etype, i
     ),
-    last_pts AS (SELECT etype, x, y FROM ord WHERE rn = n AND n > {k}),
-    p0 AS (SELECT etype, x, y FROM ord WHERE rn = 1 AND n > {k}),
+    last_pts AS (SELECT etype, x, y FROM ord WHERE rn = n AND n > {12}),
+    p0 AS (SELECT etype, x, y FROM ord WHERE rn = 1 AND n > {12}),
     anchors AS (
       -- the next anchor for bucket i: bucket i+1's centroid, or the
       -- series' last point for the final bucket
@@ -2250,7 +2250,7 @@ def _lttb_oracle(k: int = 12) -> str:
         ON nx.etype = c.etype AND nx.i = c.i + 1
     ),{",".join(sels)}
     SELECT etype, CAST(x AS DOUBLE) AS x, round(y, 6) AS y FROM ord
-    WHERE n <= {k}
+    WHERE n <= {12}
     UNION ALL
     SELECT etype, x, round(y, 6) AS y FROM (
       SELECT etype, CAST(x AS DOUBLE) AS x, y FROM p0

@@ -16,6 +16,16 @@ from ..functions.hashing import (
     shingle_hashes_duckdb,
 )
 from ..operators.dedup import (
+    JACCARD_THRESHOLD,
+    MAX_EDIT_DISTANCE,
+    MAX_SHINGLE_DF,
+    MINHASH_K,
+    ROWS_PER_BAND,
+    SHINGLE_N,
+    SIMHASH_BANDS,
+    SIMHASH_BITS,
+    SIMHASH_MAX_BUCKET,
+    SIMHASH_MAX_HAMMING,
     duplicated_spans,
     exact_dedup_groups,
     minhash_lsh_pairs,
@@ -23,12 +33,6 @@ from ..operators.dedup import (
 )
 from ..registry import query
 
-K = 8
-ROWS_PER_BAND = 2
-SHINGLE_N = 3
-JACCARD_THRESHOLD = 0.5
-MAX_SHINGLE_DF = 100
-SIMHASH_BITS = 30
 
 
 @query(
@@ -46,7 +50,8 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _minhash_oracle() -> str:
     perm_rows = ",\n      ".join(
-        f"({i}, {a}, {b})" for i, (a, b) in enumerate(minhash_params(K))
+        f"({i}, {a}, {b})"
+        for i, (a, b) in enumerate(minhash_params(MINHASH_K))
     )
     sh_expr = shingle_hashes_duckdb("text", SHINGLE_N)
     return f"""
@@ -79,12 +84,7 @@ def _minhash_oracle() -> str:
 @query("dedup_minhash_lsh_pairs", _minhash_oracle())
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(
-        load_for_compute(spark, sf_dir, "documents"),
-        "text",
-        "doc_id",
-        k=K,
-        rows_per_band=ROWS_PER_BAND,
-        shingle_n=SHINGLE_N,
+        load_for_compute(spark, sf_dir, "documents"), "text", "doc_id"
     )
 
 
@@ -183,12 +183,7 @@ def dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import dedup_clusters
 
     pairs = minhash_lsh_pairs(
-        load_for_compute(spark, sf_dir, "documents"),
-        "text",
-        "doc_id",
-        k=K,
-        rows_per_band=ROWS_PER_BAND,
-        shingle_n=SHINGLE_N,
+        load_for_compute(spark, sf_dir, "documents"), "text", "doc_id"
     )
     return dedup_clusters(pairs, "doc_a", "doc_b")
 
@@ -196,12 +191,7 @@ def dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("dedup_ngram_jaccard_pairs", _jaccard_oracle())
 def dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(
-        load_for_compute(spark, sf_dir, "documents"),
-        "text",
-        "doc_id",
-        n=SHINGLE_N,
-        threshold=JACCARD_THRESHOLD,
-        max_shingle_df=MAX_SHINGLE_DF,
+        load_for_compute(spark, sf_dir, "documents"), "text", "doc_id"
     )
 
 
@@ -211,7 +201,7 @@ _ = F  # columns built in operators
 _DUP_SPANS_K = 40
 
 
-def span_excision_ctes(src: str, k: int = _DUP_SPANS_K) -> str:
+def span_excision_ctes(src: str) -> str:
     """DuckDB CTE chain replaying duplicated_spans + excise_spans
     over the ``src`` relation (must expose doc_id and text),
     terminating in ``cleaned`` = src's columns + n_spans +
@@ -223,13 +213,13 @@ def span_excision_ctes(src: str, k: int = _DUP_SPANS_K) -> str:
     return f"""
     xpos AS (
       SELECT doc_id,
-             unnest(generate_series(1, length(text) - {k - 1})) AS i,
+             unnest(generate_series(1, length(text) - {_DUP_SPANS_K - 1})) AS i,
              text
-      FROM {src} WHERE length(text) >= {k}
+      FROM {src} WHERE length(text) >= {_DUP_SPANS_K}
     ),
     xsh AS (
       SELECT doc_id, i,
-             substr(md5(substr(text, i::INT, {k})), 1, 16) AS h
+             substr(md5(substr(text, i::INT, {_DUP_SPANS_K})), 1, 16) AS h
       FROM xpos
     ),
     xdup AS (
@@ -243,7 +233,7 @@ def span_excision_ctes(src: str, k: int = _DUP_SPANS_K) -> str:
     xspans AS (
       SELECT doc_id,
              min(i)::BIGINT AS s,
-             (max(i) + {k - 1})::BIGINT AS e
+             (max(i) + {_DUP_SPANS_K - 1})::BIGINT AS e
       FROM xflag GROUP BY doc_id, i - rn
     ),
     xpieces AS (
@@ -353,10 +343,7 @@ def corpus_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_keep = exact_dedup_groups(docs, "text", "doc_id").select(
         FF.col("keep_id").alias("doc_id")
     )
-    pairs = minhash_lsh_pairs(
-        docs, "text", "doc_id", k=K, rows_per_band=ROWS_PER_BAND,
-        shingle_n=SHINGLE_N,
-    )
+    pairs = minhash_lsh_pairs(docs, "text", "doc_id")
     non_survivors = (
         dedup_clusters(pairs, "doc_a", "doc_b")
         .where(~FF.col("is_survivor"))
@@ -492,7 +479,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import lsh_bucketed_pairs
 
     docs = load_for_compute(spark, sf_dir, "documents")
-    feats = extract_features(attach_media(docs), dim=8)
+    feats = extract_features(attach_media(docs))
     return lsh_bucketed_pairs(
         feats,
         id_col="doc_id",
@@ -531,10 +518,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components
 
     docs = load_for_compute(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        docs, "text", "doc_id", k=K, rows_per_band=ROWS_PER_BAND,
-        shingle_n=SHINGLE_N,
-    )
+    pairs = minhash_lsh_pairs(docs, "text", "doc_id")
     cc = connected_components(pairs, src="doc_a", dst="doc_b")
     w = Window.partitionBy("cluster_id").orderBy(
         F.col("n_chars").desc(), F.col("doc_id").asc()
@@ -593,7 +577,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MAX_EDIT_DISTANCE = 16
 
 
 def _edit_distance_oracle() -> str:
@@ -615,13 +598,7 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import edit_distance_pairs
 
     return edit_distance_pairs(
-        load_for_compute(spark, sf_dir, "documents"),
-        "text",
-        "doc_id",
-        max_distance=MAX_EDIT_DISTANCE,
-        k=K,
-        rows_per_band=ROWS_PER_BAND,
-        shingle_n=SHINGLE_N,
+        load_for_compute(spark, sf_dir, "documents"), "text", "doc_id"
     )
 
 
@@ -678,24 +655,21 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _simhash_band_oracle() -> str:
     # the fingerprint CTE is the dedup_simhash_fingerprints oracle
-    # verbatim; banding/cutoff/verify replicate the operator's params
-    # (5 bands x 6 bits, bucket cutoff 200, hamming <= 2 — the
-    # synthetic corpus's tiny shared vocabulary makes simhash space
-    # dup-dense, so the thresholds are tight to keep the pair set a
-    # near-dup report, not an almost-all-pairs dump)
+    # verbatim; banding/cutoff/verify use the operator's constants
+    width = SIMHASH_BITS // SIMHASH_BANDS
     sh_select = _simhash_oracle()
     return f"""
     WITH sh AS ({sh_select}),
     banded AS (
       SELECT doc_id, simhash, b.band AS band,
-             (simhash >> (b.band * 6)) % 64 AS key
-      FROM sh, (SELECT unnest(range(0, 5)) AS band) b
+             (simhash >> (b.band * {width})) % {1 << width} AS key
+      FROM sh, (SELECT unnest(range(0, {SIMHASH_BANDS})) AS band) b
     ),
     sized AS (
       SELECT *, count(*) OVER (PARTITION BY band, key) AS bsz
       FROM banded
     ),
-    kept AS (SELECT * FROM sized WHERE bsz <= 200),
+    kept AS (SELECT * FROM sized WHERE bsz <= {SIMHASH_MAX_BUCKET}),
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
              a.simhash AS sh_a, b.simhash AS sh_b
@@ -704,7 +678,7 @@ def _simhash_band_oracle() -> str:
     )
     SELECT id_a, id_b,
            CAST(bit_count(xor(sh_a, sh_b)) AS INT) AS hamming
-    FROM cand WHERE bit_count(xor(sh_a, sh_b)) <= 2
+    FROM cand WHERE bit_count(xor(sh_a, sh_b)) <= {SIMHASH_MAX_HAMMING}
     """
 
 
@@ -716,10 +690,7 @@ def dedup_simhash_band_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import simhash_band_pairs
 
     docs = load_for_compute(spark, sf_dir, "documents")
-    return simhash_band_pairs(
-        docs, "doc_id", "text", bits=SIMHASH_BITS, bands=5,
-        max_hamming=2, max_bucket=200,
-    )
+    return simhash_band_pairs(docs)
 
 
 def _simhash_clusters_oracle() -> str:
@@ -745,9 +716,7 @@ def dedup_simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import dedup_clusters
 
     pairs = simhash_band_pairs(
-        load_for_compute(spark, sf_dir, "documents"),
-        "doc_id", "text", bits=SIMHASH_BITS, bands=5,
-        max_hamming=2, max_bucket=200,
+        load_for_compute(spark, sf_dir, "documents")
     ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
     return dedup_clusters(pairs, "doc_a", "doc_b")
 
@@ -1093,10 +1062,7 @@ def pipeline_leakage_safe_split(
     from .sampling_q import SPLIT_FRACTIONS, SPLIT_SEED
 
     docs = load_for_compute(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        docs, "text", "doc_id", k=K, rows_per_band=ROWS_PER_BAND,
-        shingle_n=SHINGLE_N,
-    )
+    pairs = minhash_lsh_pairs(docs, "text", "doc_id")
     cc = connected_components(pairs, src="doc_a", dst="doc_b")
     keyed = (
         docs.select("doc_id")
@@ -1129,7 +1095,6 @@ CDC_SPAN_SUBSET = 25  # the JVM fold pays O(window) per position;
 # (the signal is per-length-class, not row count — the pandas
 # throughput path covers the full corpus in dedup_cdc_shared_chunks)
 CDC_SHARED_SUBSET = 2  # a microbenchmark at driver-check scale
-CDC_MIN_SHARED_LEN = 8
 
 
 def _cdc_base_ctes(where: str) -> str:
@@ -1226,12 +1191,14 @@ def dedup_cdc_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cdc_shared_oracle() -> str:
+    from ..operators.cdc import MIN_SHARED_LEN
+
     return f"""
     WITH {_cdc_base_ctes(f"doc_id % {CDC_SHARED_SUBSET} = 0")},
     fp AS (
       SELECT doc_id, chunk_len,
              {_cdc_chunk_fp_sql()} AS chunk_fp
-      FROM sp WHERE chunk_len >= {CDC_MIN_SHARED_LEN}
+      FROM sp WHERE chunk_len >= {MIN_SHARED_LEN}
     )
     SELECT chunk_fp,
            count(DISTINCT doc_id) AS n_docs,
@@ -1254,16 +1221,18 @@ def dedup_cdc_shared_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % CDC_SHARED_SUBSET == 0
     )
-    return cdc_shared_chunks(docs, min_len=CDC_MIN_SHARED_LEN)
+    return cdc_shared_chunks(docs)
 
 
 def _cdc_ratio_oracle() -> str:
+    from ..operators.cdc import MIN_SHARED_LEN
+
     return f"""
     WITH {_cdc_base_ctes(f"doc_id % {CDC_SHARED_SUBSET} = 0")},
     fp AS (
       SELECT doc_id, chunk_len,
              {_cdc_chunk_fp_sql()} AS chunk_fp
-      FROM sp WHERE chunk_len >= {CDC_MIN_SHARED_LEN}
+      FROM sp WHERE chunk_len >= {MIN_SHARED_LEN}
     ),
     shx AS (
       SELECT chunk_fp FROM fp GROUP BY chunk_fp
@@ -1304,4 +1273,4 @@ def dedup_cdc_duplication_ratio(
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % CDC_SHARED_SUBSET == 0
     )
-    return cdc_duplication_ratio(docs, min_len=CDC_MIN_SHARED_LEN)
+    return cdc_duplication_ratio(docs)

@@ -20,7 +20,9 @@ from ..operators.multimodal import (
     real_decoder,
     BYTE_B,
     BYTE_C,
+    FEATURE_DIM,
     FRAME_BYTES,
+    FRAME_STRIDE,
     LEN_BASE,
     LEN_MOD,
     attach_media,
@@ -61,26 +63,26 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_stats(_media(spark, sf_dir))
 
 
-def _features_oracle(dim: int = 8) -> str:
+def _features_oracle() -> str:
     # exploded (doc_id, k, value): one row per stripe, flat-hashable.
-    stripe = f"list_filter(range(0, {_LEN}), i -> i % {dim} = t.k)"
+    stripe = f"list_filter(range(0, {_LEN}), i -> i % {FEATURE_DIM} = t.k)"
     s = f"list_sum(list_transform({stripe}, i -> {_BYTE}))"
     term = f"floor(CAST({s} AS DOUBLE) / len({stripe}) * 10000) / 10000"
     return f"""
     SELECT doc_id, CAST(t.k AS INT) AS k, {term} AS value
-    FROM documents, range(0, {dim}) t(k)
+    FROM documents, range(0, {FEATURE_DIM}) t(k)
     """
 
 
 @query("multimodal_stripe_features", _features_oracle())
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feats = extract_features(_media(spark, sf_dir), dim=8)
+    feats = extract_features(_media(spark, sf_dir))
     return feats.select(
         "doc_id", F.posexplode("feature").alias("k", "value")
     )
 
 
-def _frames_oracle(every: int = 4) -> str:
+def _frames_oracle() -> str:
     fb = FRAME_BYTES
     return f"""
     WITH v AS (
@@ -89,7 +91,7 @@ def _frames_oracle(every: int = 4) -> str:
     f AS (
       SELECT doc_id,
              UNNEST(list_filter(range(0, L // {fb}),
-                    j -> j % {every} = 0)) AS j
+                    j -> j % {FRAME_STRIDE} = 0)) AS j
       FROM v
     )
     SELECT doc_id, CAST(j AS INT) AS frame_idx,
@@ -101,7 +103,7 @@ def _frames_oracle(every: int = 4) -> str:
 
 @query("multimodal_frame_sample", _frames_oracle())
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sample_frames(_media(spark, sf_dir), every=4)
+    return sample_frames(_media(spark, sf_dir))
 
 
 def _audio_rms_oracle() -> str:

@@ -11,12 +11,17 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_for_compute, load_table
 from ..functions.hashing import tokens_duckdb
-from ..operators.packing import chunk_manifest, pack_sequences
+from ..operators.packing import (
+    BATCH_BUCKET_WIDTH,
+    BATCH_SIZE,
+    CTX_LEN,
+    N_BUCKETS,
+    chunk_manifest,
+    pack_sequences,
+)
 from ..operators.text import n_tokens
 from ..registry import query
 
-CTX_LEN = 512
-N_BUCKETS = 8
 
 _TOK = tokens_duckdb("text")
 
@@ -52,12 +57,7 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document span assignment in the packed token stream —
     bucket-parallel concat-and-chunk (one uniform shuffle)."""
     docs = load_table(spark, sf_dir, "documents")
-    return pack_sequences(
-        docs,
-        n_tokens("text").cast("long"),
-        ctx_len=CTX_LEN,
-        n_buckets=N_BUCKETS,
-    )
+    return pack_sequences(docs, n_tokens("text").cast("long"))
 
 
 @query(
@@ -84,17 +84,8 @@ def packing_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-chunk manifest: every full chunk sums to exactly CTX_LEN
     tokens; the data-loader-facing view of the packing."""
     docs = load_table(spark, sf_dir, "documents")
-    packed = pack_sequences(
-        docs,
-        n_tokens("text").cast("long"),
-        ctx_len=CTX_LEN,
-        n_buckets=N_BUCKETS,
-    )
-    return chunk_manifest(packed, ctx_len=CTX_LEN)
-
-
-BATCH_BUCKET_WIDTH = 8
-BATCH_SIZE = 8
+    packed = pack_sequences(docs, n_tokens("text").cast("long"))
+    return chunk_manifest(packed)
 
 
 def _bucketed_batches_oracle() -> str:
@@ -139,6 +130,4 @@ def pipeline_bucketed_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", F.size(tokens("text")).alias("nt")),
         "doc_id",
         F.col("nt"),
-        bucket_width=BATCH_BUCKET_WIDTH,
-        batch_size=BATCH_SIZE,
     )

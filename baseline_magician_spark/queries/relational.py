@@ -309,7 +309,7 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("type_len", F.length("event_type"))
     )
     return (
-        salted_join(events, dim, "event_type", n_salts=8)
+        salted_join(events, dim, "event_type")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -333,9 +333,7 @@ def skew_salted_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.skew import salted_distinct_count
 
     events = load_table(spark, sf_dir, "events")
-    return salted_distinct_count(
-        events, ["event_type"], "user_id", n_salts=32
-    )
+    return salted_distinct_count(events, ["event_type"], "user_id")
 
 
 @query(

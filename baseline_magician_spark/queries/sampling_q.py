@@ -23,14 +23,14 @@ from ..operators.sampling import (
     stratified_sample,
     hash60_sql,
     HASH_SPACE,
+    STRATA_DEFAULT,
+    STRATA_SEED,
 )
 from ..registry import query
 
 SPLIT_SEED = "split42"
 SPLIT_FRACTIONS = {"train": 0.8, "valid": 0.1, "test": 0.1}
-STRATA_SEED = "strat7"
 STRATA_FRACTIONS = {"en": 0.5, "zh": 0.25}
-STRATA_DEFAULT = 0.1
 QUOTA_SEED = "quota1"
 QUOTA_N = 120
 MIX_WEIGHTS = {"src0": 0.3, "src1": 0.2, "src2": 0.1}
@@ -93,14 +93,9 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language Bernoulli sample (en 50%, zh 25%, rest 10%) with
     exact integer thresholds — zero-shuffle, fully codegen'd."""
     docs = load_table(spark, sf_dir, "documents")
-    return stratified_sample(
-        docs,
-        "lang",
-        STRATA_FRACTIONS,
-        "doc_id",
-        seed=STRATA_SEED,
-        default_fraction=STRATA_DEFAULT,
-    ).select("doc_id", "lang")
+    return stratified_sample(docs, "lang", STRATA_FRACTIONS, "doc_id").select(
+        "doc_id", "lang"
+    )
 
 
 def _quota_oracle() -> str:
@@ -245,7 +240,7 @@ def pipeline_training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_lsh_pairs,
     )
     from ..operators.graph import dedup_clusters
-    from .dedup_q import _DUP_SPANS_K, K, ROWS_PER_BAND, SHINGLE_N
+    from .dedup_q import _DUP_SPANS_K
 
     # widened load: the MinHash signature fold is the expensive narrow
     # stage of this composition (see catalog.load_for_compute)
@@ -255,10 +250,7 @@ def pipeline_training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_keep = exact_dedup_groups(docs, "text", "doc_id").select(
         F.col("keep_id").alias("doc_id")
     )
-    pairs = minhash_lsh_pairs(
-        docs, "text", "doc_id", k=K, rows_per_band=ROWS_PER_BAND,
-        shingle_n=SHINGLE_N,
-    )
+    pairs = minhash_lsh_pairs(docs, "text", "doc_id")
     non_survivors = (
         dedup_clusters(pairs, "doc_a", "doc_b")
         .where(~F.col("is_survivor"))
@@ -342,14 +334,15 @@ def pipeline_training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shuffle_oracle(seed: str = "epoch0", n_buckets: int = 16) -> str:
+def _shuffle_oracle() -> str:
     from ..functions.hashing import poly_hash_duckdb
+    from ..operators.sampling import SHUFFLE_BUCKETS, SHUFFLE_SEED
 
-    hk = poly_hash_duckdb(f"CAST(doc_id AS VARCHAR) || '{seed}'")
+    hk = poly_hash_duckdb(f"CAST(doc_id AS VARCHAR) || '{SHUFFLE_SEED}'")
     return f"""
     WITH t AS (SELECT doc_id AS id, {hk} AS hk FROM documents)
     SELECT id,
-           CAST(row_number() OVER (ORDER BY hk % {n_buckets}, hk, id) - 1
+           CAST(row_number() OVER (ORDER BY hk % {SHUFFLE_BUCKETS}, hk, id) - 1
                 AS BIGINT) AS shuffle_rank
     FROM t
     """
@@ -363,7 +356,7 @@ def pipeline_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import deterministic_shuffle
 
     docs = load_table(spark, sf_dir, "documents")
-    return deterministic_shuffle(docs, "doc_id", seed="epoch0", n_buckets=16)
+    return deterministic_shuffle(docs, "doc_id")
 
 
 def _temperature_oracle() -> str:
@@ -398,7 +391,7 @@ def sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import temperature_weights
 
     docs = load_table(spark, sf_dir, "documents")
-    return temperature_weights(docs, "source", F.col("n_chars"), alpha=0.5)
+    return temperature_weights(docs, "source", F.col("n_chars"))
 
 
 def _curriculum_oracle() -> str:

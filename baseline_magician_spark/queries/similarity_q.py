@@ -9,6 +9,12 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_for_compute, load_table
 from ..operators.similarity import (
+    N_CENTROIDS,
+    N_PROBE,
+    N_QUERY_VECS,
+    PQ_CODES,
+    PQ_M,
+    TOP_K,
     _HP_A,
     _HP_B,
     _HP_MOD,
@@ -18,8 +24,6 @@ from ..operators.similarity import (
 )
 from ..registry import query
 
-TOP_K = 10
-N_QUERY_VECS = 5  # vec_id < 5 are the query set
 N_PLANES = 8
 EMB_DIM = 64  # embeddings.parquet vector width (TESTDATA.md)
 # The synthetic embeddings are near-orthogonal (max pairwise cosine
@@ -72,7 +76,7 @@ def _topk_oracle() -> str:
 def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_for_compute(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERY_VECS)
-    return brute_force_topk(emb, queries, k=TOP_K)
+    return brute_force_topk(emb, queries)
 
 
 def _lsh_oracle() -> str:
@@ -124,8 +128,6 @@ def _seed_centroids(spark, sf_dir, n):
     )
 
 
-N_CENTROIDS = 16
-N_PROBE = 4
 
 
 def _ivf_oracle() -> str:
@@ -175,14 +177,7 @@ def _ivf_oracle() -> str:
 @query("similarity_ivf_topk", _ivf_oracle())
 def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk(
-        emb,
-        k=TOP_K,
-        n_query_vecs=N_QUERY_VECS,
-        n_centroids=N_CENTROIDS,
-        n_probe=N_PROBE,
-        centroids=_seed_centroids(spark, sf_dir, N_CENTROIDS),
-    )
+    return ivf_topk(emb, _seed_centroids(spark, sf_dir, N_CENTROIDS))
 
 
 @query("similarity_ivf_serve_persisted", _ivf_oracle())
@@ -211,7 +206,7 @@ def similarity_ivf_serve_persisted(
     )
     ann_index_write(emb, path, cents)
     qs = emb.where(F.col("vec_id") < N_QUERY_VECS)
-    return ivf_serve_persisted(qs, path, k=TOP_K, n_probe=N_PROBE)
+    return ivf_serve_persisted(qs, path)
 
 
 def _bucket_histogram_oracle() -> str:
@@ -296,13 +291,10 @@ def similarity_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return ivf_train_step_flat(
         emb,
-        n_centroids=N_CENTROIDS,
         centroids=_seed_centroids(spark, sf_dir, N_CENTROIDS),
     )
 
 
-PQ_M = 4  # subspaces
-PQ_CODES = 16  # codes per subspace (seeded like the IVF centroids)
 _PQ_SUB = EMB_DIM // PQ_M
 
 # squared-L2 fold, same left-to-right order as
@@ -369,9 +361,9 @@ def similarity_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     codebooks = pq_codebooks_from_seeds(
-        _seed_centroids(spark, sf_dir, PQ_CODES), m=PQ_M
+        _seed_centroids(spark, sf_dir, PQ_CODES)
     )
-    enc = pq_encode(emb, codebooks, "vec_id", "embedding")
+    enc = pq_encode(emb, codebooks)
     return enc.select(
         "vec_id",
         *[
@@ -419,18 +411,17 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return pq_adc_topk(
         emb,
-        k=TOP_K,
-        n_query_vecs=N_QUERY_VECS,
-        n_codes=PQ_CODES,
-        m=PQ_M,
         codebooks=pq_codebooks_from_seeds(
-            _seed_centroids(spark, sf_dir, PQ_CODES), m=PQ_M
+            _seed_centroids(spark, sf_dir, PQ_CODES)
         ),
     )
 
 
-def _kmeans_oracle(steps: int = 3) -> str:
-    """k Lloyd iterations as a CTE chain. Centroids are rounded to 6
+KMEANS_STEPS = 3
+
+
+def _kmeans_oracle() -> str:
+    """KMEANS_STEPS Lloyd iterations as a CTE chain. Centroids are rounded to 6
     decimals at every step IN BOTH ENGINES, so each step's assignment
     compares identical doubles and per-step drift cannot accumulate.
     Residual tolerance (shared with every rounded oracle in this repo):
@@ -441,7 +432,7 @@ def _kmeans_oracle(steps: int = 3) -> str:
         f"WITH cents0 AS (SELECT vec_id AS cid, embedding AS cvec "
         f"FROM embeddings WHERE vec_id < {N_CENTROIDS})"
     )
-    for s in range(1, steps + 1):
+    for s in range(1, KMEANS_STEPS + 1):
         prev = f"cents{s - 1}"
         sql += f""",
     assign{s} AS (
@@ -467,12 +458,12 @@ def _kmeans_oracle(steps: int = 3) -> str:
     sql += f"""
     SELECT cell, CAST(c AS BIGINT) AS n_members,
            CAST(pos AS INT) AS pos, m AS value
-    FROM m{steps}
+    FROM m{KMEANS_STEPS}
     """
     return sql
 
 
-@query("similarity_kmeans_three_steps", _kmeans_oracle(3))
+@query("similarity_kmeans_three_steps", _kmeans_oracle())
 def similarity_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three iterated Lloyd steps — the actual k-means training loop
     the IVF index comes from. Each step is one distributed job (map-
@@ -493,11 +484,9 @@ def similarity_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, N_CENTROIDS
     )
     try:
-        for _step in range(2):
+        for _step in range(KMEANS_STEPS - 1):
             by_cell: dict[int, list[tuple[int, float]]] = {}
-            step_df = ivf_train_step_flat(
-                emb, n_centroids=N_CENTROIDS, centroids=cents
-            )
+            step_df = ivf_train_step_flat(emb, centroids=cents)
             for r in step_df.collect():
                 by_cell.setdefault(int(r["cell"]), []).append(
                     (int(r["pos"]), float(r["value"]))
@@ -510,7 +499,6 @@ def similarity_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.unpersist()
     return ivf_train_step_flat(
         load_table(spark, sf_dir, "embeddings"),
-        n_centroids=N_CENTROIDS,
         centroids=cents,
     )
 
@@ -580,11 +568,8 @@ def similarity_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         centroids=[s for s in seeds if s[0] < N_CENTROIDS],
         codebooks=pq_codebooks_from_seeds(
-            [s for s in seeds if s[0] < PQ_CODES], m=PQ_M
+            [s for s in seeds if s[0] < PQ_CODES]
         ),
-        k=TOP_K,
-        n_query_vecs=N_QUERY_VECS,
-        n_probe=N_PROBE,
     )
 
 
@@ -625,9 +610,9 @@ def similarity_pq_recon_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     codebooks = pq_codebooks_from_seeds(
-        _seed_centroids(spark, sf_dir, PQ_CODES), m=PQ_M
+        _seed_centroids(spark, sf_dir, PQ_CODES)
     )
-    enc = pq_encode(emb, codebooks, "vec_id", "embedding")
+    enc = pq_encode(emb, codebooks)
     err = _pairwise_score_relation(
         emb.select("vec_id", "embedding").join(
             enc.select("vec_id", "_recon"), "vec_id"
@@ -713,7 +698,7 @@ def similarity_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_for_compute(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERY_VECS)
-    return int8_topk(emb, queries, k=TOP_K)
+    return int8_topk(emb, queries)
 
 
 def _recall_oracle() -> str:
@@ -912,7 +897,7 @@ def similarity_binary_rerank(
 
     emb = load_for_compute(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERY_VECS)
-    return binary_rerank_topk(emb, queries, k=TOP_K, prefilter_mult=4)
+    return binary_rerank_topk(emb, queries)
 
 
 # -- Matryoshka truncation recall (round 10) ---------------------------
@@ -979,14 +964,12 @@ def similarity_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vector bytes, which is the point."""
     emb = load_for_compute(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERY_VECS)
-    truth = brute_force_topk(emb, queries, k=TOP_K).select(
-        "query_id", "neighbor_id"
-    )
+    truth = brute_force_topk(emb, queries).select("query_id", "neighbor_id")
     half = emb.select(
         "vec_id", F.slice("embedding", 1, MAT_DIM).alias("embedding")
     )
     approx = brute_force_topk(
-        half, half.where(F.col("vec_id") < N_QUERY_VECS), k=TOP_K
+        half, half.where(F.col("vec_id") < N_QUERY_VECS)
     ).select("query_id", "neighbor_id")
     ov = (
         truth.join(approx, ["query_id", "neighbor_id"])

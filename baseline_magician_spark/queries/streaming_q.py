@@ -17,12 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
 from ..streaming.baseline_stream import (
-    ip_expr_from_user_id,
     read_events_stream,
     streaming_baseline_aggregate,
     streaming_event_counts,
     streaming_sessionize,
 )
+from ..streaming.dedup_join import MAX_DELAY_MINUTES
 
 GAP_SECONDS = 30 * 60
 
@@ -161,7 +161,7 @@ def _baseline_stream_oracle() -> str:
 
 @query("streaming_baseline_windows", _baseline_stream_oracle())
 def stream_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .baseline_q import METRIC_MAP, NETWORKS
+    from .baseline_q import METRIC_MAP, NETWORKS, ip_expr_from_user_id
     from ..plans.baseline import networks_dataframe
 
     nets = networks_dataframe(spark, NETWORKS)
@@ -182,13 +182,12 @@ def stream_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-K_ANOMALY = 3
-
-
 def _anomaly_oracle() -> str:
     """Batch window-function equivalent of the stateful stream, in the
     same exact integer-cents arithmetic (values are 2-decimal): flag
-    when value_cents * prior_count > k * prior_total_cents."""
+    when value_cents * prior_count > ANOMALY_K * prior_total_cents."""
+    from ..streaming.stateful import ANOMALY_K
+
     return f"""
     WITH c AS (
       SELECT user_id, event_id, ts,
@@ -211,7 +210,7 @@ def _anomaly_oracle() -> str:
            vc / 100.0 AS value,
            prior_cents / (prior_cnt * 100.0) AS running_mean
     FROM w
-    WHERE prior_cnt > 0 AND vc * prior_cnt > {K_ANOMALY} * prior_cents
+    WHERE prior_cnt > 0 AND vc * prior_cnt > {ANOMALY_K} * prior_cents
     """
 
 
@@ -220,7 +219,7 @@ def stream_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import streaming_anomaly_flags
 
     return _run_bounded(
-        streaming_anomaly_flags(read_events_stream(spark, sf_dir), k=K_ANOMALY),
+        streaming_anomaly_flags(read_events_stream(spark, sf_dir)),
         mode="append",
     )
 
@@ -242,15 +241,13 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MAX_ATTRIBUTION_MINUTES = 30
-
 _SS_JOIN_ORACLE = f"""
 SELECT c.user_id, c.ts AS click_ts, p.ts AS purchase_ts,
        round(p.value, 6) AS purchase_value
 FROM events c JOIN events p
   ON c.user_id = p.user_id
  AND p.ts > c.ts
- AND p.ts <= c.ts + INTERVAL {MAX_ATTRIBUTION_MINUTES} MINUTE
+ AND p.ts <= c.ts + INTERVAL {MAX_DELAY_MINUTES} MINUTE
 WHERE c.event_type = 'click' AND p.event_type = 'purchase'
 """
 
@@ -260,10 +257,7 @@ def stream_ss_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.dedup_join import streaming_click_purchase_join
 
     return _run_bounded(
-        streaming_click_purchase_join(
-            read_events_stream(spark, sf_dir),
-            max_delay_minutes=MAX_ATTRIBUTION_MINUTES,
-        ),
+        streaming_click_purchase_join(read_events_stream(spark, sf_dir)),
         mode="append",
     )
 
@@ -390,9 +384,14 @@ def streaming_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from ..catalog import load_table
-    from ..operators.text import cms_cells, count_min_sketch
+    from ..operators.text import (
+        CMS_DEPTH,
+        CMS_WIDTH,
+        cms_cells,
+        count_min_sketch,
+    )
 
-    depth, width, slack = 4, 1024, 8
+    depth, width, slack = CMS_DEPTH, CMS_WIDTH, 8
 
     ev = load_table(spark, sf_dir, "events")
     src = tempfile.mkdtemp(prefix="bms_cms_stream_")
@@ -409,9 +408,7 @@ def streaming_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             keys = batch_df.select(
                 F.col("user_id").cast("string").alias("s")
             )
-            sketch, _probe = count_min_sketch(
-                keys, "s", depth=depth, width=width
-            )
+            sketch, _probe = count_min_sketch(keys)
             for r in sketch.collect():
                 k = (r["row"], r["bucket"])
                 cells_state[k] = cells_state.get(k, 0) + int(r["cnt"])

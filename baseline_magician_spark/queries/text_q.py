@@ -11,6 +11,9 @@ from ..catalog import load_for_compute
 from ..functions.hashing import poly_hash_duckdb
 from ..operators.text import (
     BPE_PATTERN,
+    CMS_WIDTH,
+    DSIR_BUCKETS,
+    DSIR_SCALE,
     LANG_MARKERS,
     PUNCT_PATTERN,
     STOPWORDS,
@@ -133,7 +136,7 @@ def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         normalized_fingerprint("text").alias("fingerprint"),
-        winnow_min_shingle("text", 3).alias("min_shingle_hash"),
+        winnow_min_shingle("text").alias("min_shingle_hash"),
     )
 
 
@@ -336,8 +339,6 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CMS_DEPTH = 4
-CMS_WIDTH = 1024
 CMS_SLACK = 8  # tolerated overestimate: SLACK * stream/size / width
 
 
@@ -381,9 +382,7 @@ def text_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.array_distinct(token_shingles("text", 2))).alias("s")
     )
     exact = shingles.groupBy("s").agg(F.count(F.lit(1)).alias("doc_freq"))
-    sketch, probe = count_min_sketch(
-        exact, "s", depth=CMS_DEPTH, width=CMS_WIDTH, weight_col="doc_freq"
-    )
+    sketch, probe = count_min_sketch(exact, weight_col="doc_freq")
     top = exact.orderBy(F.desc("doc_freq"), F.asc("s")).limit(50)
     est = probe(top, "s")
     total = exact.agg(F.sum("doc_freq").alias("_n"))
@@ -665,7 +664,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import tfidf_top_terms
 
     docs = load_for_compute(spark, sf_dir, "documents")
-    return tfidf_top_terms(docs, "doc_id", "text", k=3)
+    return tfidf_top_terms(docs)
 
 
 def _bloom_oracle() -> str:
@@ -737,7 +736,6 @@ def text_bloom_vocab_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.where(F.col("source") == "src0"),
             F.lower(F.col("text")),
             id_cols=("doc_id",),
-            n=3,
         )
         .select("term", "_h")
         .distinct()
@@ -749,7 +747,6 @@ def text_bloom_vocab_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.where(F.col("source") != "src0"),
         F.lower(F.col("text")),
         id_cols=("doc_id", "lang"),
-        n=3,
     )
     probed = bloom_probe(probe, "term", bloom, m=32768, hash_col="_h")
     exact = probed.join(
@@ -897,8 +894,6 @@ def text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # round-4 addition: DSIR importance weights (Xie et al. 2023) — the
 # target-distribution data-selection scorer
 
-DSIR_BUCKETS = 512
-DSIR_SCALE = 1_000_000
 
 
 def _dsir_oracle() -> str:
@@ -939,10 +934,7 @@ def text_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import dsir_importance_weights
 
     docs = load_for_compute(spark, sf_dir, "documents")
-    return dsir_importance_weights(
-        docs, "text", "doc_id",
-        n_buckets=DSIR_BUCKETS, scale=DSIR_SCALE,
-    )
+    return dsir_importance_weights(docs)
 
 
 def _token_entropy_oracle() -> str:
@@ -1111,11 +1103,9 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (doc, shingle-hash)), the gaps-and-islands merge, and the excision
 # fold, then hash-checks the cleaned text per language — the same
 # digest technique as pipeline_span_excision.
-_SELF_REP_K = 16
-
-
 def _self_repetition_oracle() -> str:
-    k = _SELF_REP_K
+    from ..operators.dedup import SELF_REP_K as k
+
     return f"""
     WITH pos AS (
       SELECT doc_id,
@@ -1190,9 +1180,7 @@ def text_self_repetition_excision(
     from ..operators.dedup import excise_spans, self_repetition_spans
 
     docs = load_for_compute(spark, sf_dir, "documents")
-    spans = self_repetition_spans(
-        docs, "text", "doc_id", k=_SELF_REP_K
-    )
+    spans = self_repetition_spans(docs, "text", "doc_id")
     cleaned = excise_spans(
         docs.select("doc_id", "text"), spans, "text", "doc_id"
     ).join(docs.select(F.col("doc_id").alias("id"), "lang"), "id")

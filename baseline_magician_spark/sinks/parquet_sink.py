@@ -15,22 +15,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-    mode: str = "overwrite",
-    max_records_per_file: int = 1_000_000,
-) -> None:
-    """Write a date/key-partitioned parquet dataset.
+# Rows per parquet file: the reference driver's INSERT block size
+# (1M rows/block, clickhouse-go bootstrap.go:96).
+MAX_RECORDS_PER_FILE = 1_000_000
 
-    ``max_records_per_file`` defaults to the reference driver's INSERT
-    block size (1M rows/block, clickhouse-go bootstrap.go:96) — the
-    same batching constant, applied to parquet files.
-    """
+
+def write_partitioned(
+    df: DataFrame, path: str, partition_by: list[str]
+) -> None:
+    """Write (overwrite) a date/key-partitioned parquet dataset."""
     (
-        df.write.mode(mode)
-        .option("maxRecordsPerFile", max_records_per_file)
+        df.write.mode("overwrite")
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
         .partitionBy(*partition_by)
         .parquet(path)
     )

@@ -7,7 +7,7 @@ is the default), splits uncompressed shards by byte range, and
 parallelizes over files — the same scan model as parquet, so every
 downstream operator in this engine runs unchanged on a JSONL corpus.
 
-Always pass an explicit schema: without one Spark runs a FULL inference
+Reads always pass an explicit schema: without one Spark runs a FULL inference
 pass over the data before the real read (twice the I/O at 100 TB), and
 inferred types drift per shard (an all-int shard infers long where a
 mixed shard infers double). ``DOCUMENTS_SCHEMA`` mirrors
@@ -24,54 +24,34 @@ DOCUMENTS_SCHEMA = (
 )
 
 
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: str = DOCUMENTS_SCHEMA,
-    mode: str = "FAILFAST",
-) -> DataFrame:
-    """Read a JSONL corpus with an explicit schema.
-
-    ``mode``: FAILFAST surfaces corrupt lines as errors (the default
-    here — silent row drops are how corpora lose documents);
-    PERMISSIVE instead nulls the malformed row's columns and keeps the
-    raw line in ``_corrupt_record`` when that column is added to the
-    schema.
-    """
+def read_jsonl(spark: SparkSession, path: str) -> DataFrame:
+    """Read a JSONL corpus with ``DOCUMENTS_SCHEMA`` in FAILFAST mode:
+    a corrupt line is an error, because silent row drops are how
+    corpora lose documents (:func:`read_jsonl_with_corrupt` keeps
+    them instead)."""
     return (
-        spark.read.schema(schema)
-        .option("mode", mode)
+        spark.read.schema(DOCUMENTS_SCHEMA)
+        .option("mode", "FAILFAST")
         .json(path)
     )
 
 
-def read_jsonl_with_corrupt(
-    spark: SparkSession, path: str, schema: str = DOCUMENTS_SCHEMA
-) -> DataFrame:
+def read_jsonl_with_corrupt(spark: SparkSession, path: str) -> DataFrame:
     """PERMISSIVE read that keeps malformed lines: adds a
     ``_corrupt_record`` column holding the raw line for rows that fail
     to parse (NULL for clean rows) — the quarantine pattern: filter
     them out to a side table instead of aborting a 100 TB ingest."""
     return (
-        spark.read.schema(schema + ", _corrupt_record string")
+        spark.read.schema(DOCUMENTS_SCHEMA + ", _corrupt_record string")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
     )
 
 
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    n_shards: int | None = None,
-    mode: str = "error",
-) -> None:
-    """Write a corpus as sharded JSONL. ``n_shards`` controls the shard
-    count (repartition — at scale, size shards to ~100-500 MB so the
-    next reader gets well-sized splits); default keeps the input
-    partitioning. ``mode`` defaults to Spark's errorifexists safety —
-    pass ``"overwrite"`` explicitly to replace an existing corpus
-    directory (destructive)."""
-    if n_shards is not None:
-        df = df.repartition(n_shards)
-    df.write.mode(mode).json(path)
+def write_jsonl(df: DataFrame, path: str) -> None:
+    """Write a corpus as JSONL, one shard per input partition
+    (repartition first to size shards — at scale ~100-500 MB so the
+    next reader gets well-sized splits). Fails if ``path`` exists:
+    Spark's errorifexists mode, so no corpus directory is replaced."""
+    df.write.mode("error").json(path)

@@ -101,18 +101,15 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def streaming_event_counts(
-    events: DataFrame,
-    window_duration: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Tumbling-window per-type counts with late-data handling.
+def streaming_event_counts(events: DataFrame) -> DataFrame:
+    """Tumbling 1-hour-window per-type counts with late-data handling
+    (2-hour watermark).
 
     Output: (window_start, window_end, event_type, n_events, sum_value).
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration).alias("w"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 6).alias("sum_value"),
@@ -132,19 +129,17 @@ def streaming_baseline_aggregate(
     networks: DataFrame,
     metric_map: dict[str, tuple[str, float]],
     ip_expr: Column,
-    window_duration: str = "1 day",
-    watermark: str = "1 day",
 ) -> DataFrame:
-    """The baseline pipeline as an incremental query: per (window,
-    network) the same ``floor(avg(metric))`` aggregates the batch plan
-    computes per network (plans.baseline.baseline_aggregate).
+    """The baseline pipeline as an incremental query: per (1-day
+    window, network) the same ``floor(avg(metric))`` aggregates the
+    batch plan computes per network (plans.baseline.baseline_aggregate).
 
     ``networks`` is the static broadcast dimension (network,
     start_long, end_long); ``ip_expr`` maps an event row to its ip
     long (the events->host_metrics adapter, queries.baseline_q).
     """
     with_ip = events.withColumn("_ip_long", ip_expr)
-    joined = broadcast_range_join(with_ip, networks, ip_col="_ip_long")
+    joined = broadcast_range_join(with_ip, networks)
     aggs = [F.count(F.lit(1)).alias("samples")]
     for metric, (etype, scale) in metric_map.items():
         aggs.append(
@@ -159,8 +154,8 @@ def streaming_baseline_aggregate(
             .alias(metric)
         )
     return (
-        joined.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration).alias("w"), "network")
+        joined.withWatermark("ts", "1 day")
+        .groupBy(F.window("ts", "1 day").alias("w"), "network")
         .agg(*aggs)
         .select(
             F.col("w.start").alias("window_start"),
@@ -171,20 +166,17 @@ def streaming_baseline_aggregate(
     )
 
 
-def streaming_sessionize(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Per-user session aggregation with a gap-based session window —
+def streaming_sessionize(events: DataFrame) -> DataFrame:
+    """Per-user session aggregation with a 30-minute-gap session window
+    (1-hour watermark) —
     the custom-stateful-operator slot, expressed with the built-in
     ``session_window`` (state compaction handled by the engine).
 
     Output: (user_id, session_start, session_end, n_events, total_value).
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 6).alias("total_value"),
@@ -197,11 +189,3 @@ def streaming_sessionize(
             "total_value",
         )
     )
-
-
-def ip_expr_from_user_id(
-    base: int = 167772160, spread: int = 2654435761, mod: int = 65536
-) -> Column:
-    """The events->host adapter's deterministic user->ip mapping
-    (queries.baseline_q: IP_BASE + (user_id * IP_SPREAD) % 65536)."""
-    return F.lit(base) + (F.col("user_id") * F.lit(spread)) % F.lit(mod)

@@ -13,11 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+WATERMARK = "2 hours"
+# a purchase is attributed to a click at most this long before it
+MAX_DELAY_MINUTES = 30
 
-def streaming_dedup_keys(
-    events: DataFrame,
-    watermark: str = "2 hours",
-) -> DataFrame:
+
+def streaming_dedup_keys(events: DataFrame) -> DataFrame:
     """Streaming exact dedup on (user_id, event_type, event hour).
 
     Emits each key the first time it is seen and never again — the
@@ -33,7 +34,7 @@ def streaming_dedup_keys(
     is identical.
     """
     keyed = (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .select(
             "user_id",
             "event_type",
@@ -45,11 +46,9 @@ def streaming_dedup_keys(
 
 def streaming_click_purchase_join(
     events: DataFrame,
-    max_delay_minutes: int = 30,
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Stream-stream inner join: purchases attributed to a click by the
-    same user within ``max_delay_minutes`` before the purchase.
+    same user within MAX_DELAY_MINUTES before the purchase.
 
     Both sides carry watermarks and the join condition bounds event
     time on both sides — exactly what Spark needs to GC join state (a
@@ -66,7 +65,7 @@ def streaming_click_purchase_join(
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", WATERMARK)
     )
     purchases = (
         events.where(F.col("event_type") == "purchase")
@@ -75,7 +74,7 @@ def streaming_click_purchase_join(
             F.col("ts").alias("purchase_ts"),
             F.col("value").alias("purchase_value"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", WATERMARK)
     )
     joined = clicks.join(
         purchases,
@@ -83,7 +82,8 @@ def streaming_click_purchase_join(
         & (F.col("purchase_ts") > F.col("click_ts"))
         & (
             F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {max_delay_minutes} MINUTES")
+            <= F.col("click_ts")
+            + F.expr(f"INTERVAL {MAX_DELAY_MINUTES} MINUTES")
         ),
     )
     return joined.select(

@@ -40,17 +40,22 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def streaming_anomaly_flags(events: DataFrame, k: int = 3) -> DataFrame:
-    """Flag events with value > k * running mean of the user's prior
+# An event is anomalous above ANOMALY_K x its user's prior running mean.
+ANOMALY_K = 3
+
+
+def streaming_anomaly_flags(events: DataFrame) -> DataFrame:
+    """Flag events with value > ANOMALY_K * running mean of the user's prior
     events. Output: (user_id, event_id, value, running_mean — the mean
     BEFORE the flagged event).
 
     Exact-arithmetic design: event values are 2-decimal, so state
     accumulates integer CENTS and the flag predicate is the integer
-    comparison ``value_cents * prior_count > k * prior_total_cents`` —
+    comparison ``value_cents * prior_count > ANOMALY_K *
+    prior_total_cents`` —
     no floating-point accumulation anywhere, so the result is
     bit-identical to any engine computing the same definition
-    (``k`` must be an integer for this exactness).
+    (ANOMALY_K must be an integer for this exactness).
 
     Ordering precondition: events are folded into state in (ts,
     event_id) order WITHIN each micro-batch only — the equality with
@@ -73,7 +78,7 @@ def streaming_anomaly_flags(events: DataFrame, k: int = 3) -> DataFrame:
         out_rows = []
         for r in batch.itertuples():
             vc = int(round(float(r.value) * 100))
-            if cnt > 0 and vc * cnt > k * total_cents:
+            if cnt > 0 and vc * cnt > ANOMALY_K * total_cents:
                 out_rows.append(
                     (
                         int(key[0]),

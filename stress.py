@@ -93,8 +93,7 @@ def main() -> None:
 
     def minhash(k: int) -> int:
         docs = replicate(docs0, k, ["doc_id"], salt_text=True)
-        return minhash_lsh_pairs(docs, "text", "doc_id", k=8,
-                                 rows_per_band=2, shingle_n=3).count()
+        return minhash_lsh_pairs(docs, "text", "doc_id").count()
 
     def quota(k: int) -> int:
         docs = replicate(docs0, k, ["doc_id"], salt_text=False)
@@ -137,9 +136,7 @@ def main() -> None:
             F.explode(F.array_distinct(token_shingles("text", 2))).alias("s")
         )
         exact = shingles.groupBy("s").agg(F.count(F.lit(1)).alias("doc_freq"))
-        _, probe = count_min_sketch(
-            exact, "s", depth=4, width=1024, weight_col="doc_freq"
-        )
+        _, probe = count_min_sketch(exact, weight_col="doc_freq")
         top = exact.orderBy(F.desc("doc_freq"), F.asc("s")).limit(50)
         return probe(top, "s").count()
 
@@ -150,15 +147,12 @@ def main() -> None:
         from baseline_magician_spark.operators.similarity import (
             ivf_train_step_flat,
         )
-        from baseline_magician_spark.queries.similarity_q import N_CENTROIDS
 
         emb = replicate(emb0, k, ["vec_id"], salt_text=False)
         cents = None
         flat = None
         for step in range(3):
-            flat = ivf_train_step_flat(
-                emb, n_centroids=N_CENTROIDS, centroids=cents
-            )
+            flat = ivf_train_step_flat(emb, centroids=cents)
             if step < 2:
                 by_cell: dict[int, list[tuple[int, float]]] = {}
                 for r in flat.collect():
@@ -180,10 +174,7 @@ def main() -> None:
         )
 
         docs = replicate(docs0, k, ["doc_id"], salt_text=True)
-        return edit_distance_pairs(
-            docs, "text", "doc_id", max_distance=16,
-            k=8, rows_per_band=2, shingle_n=3,
-        ).count()
+        return edit_distance_pairs(docs, "text", "doc_id").count()
 
     # --- round-3 operators ---
 
@@ -195,7 +186,7 @@ def main() -> None:
         from baseline_magician_spark.operators.similarity import pq_adc_topk
 
         emb = replicate(emb0, k, ["vec_id"], salt_text=False)
-        return pq_adc_topk(emb, k=10, n_query_vecs=5).count()
+        return pq_adc_topk(emb).count()
 
     def semantic_dedup(k: int) -> int:
         """Centroid-cell keep-best: map-side argmax (O(N*K*dim)) + one
@@ -222,7 +213,7 @@ def main() -> None:
 
         docs = replicate(docs0, k, ["doc_id"], salt_text=True)
         docs = docs.repartition(spark.sparkContext.defaultParallelism)
-        return tfidf_top_terms(docs, "doc_id", "text", k=3).count()
+        return tfidf_top_terms(docs).count()
 
     def bloom_screen(k: int) -> int:
         """Bloom screening: the filter is built from a FIXED reference
@@ -319,7 +310,7 @@ def main() -> None:
                 keys = batch_df.select(
                     F.col("user_id").cast("string").alias("s")
                 )
-                sketch, _ = count_min_sketch(keys, "s", depth=4, width=1024)
+                sketch, _ = count_min_sketch(keys)
                 for r in sketch.collect():
                     kk = (r["row"], r["bucket"])
                     cells[kk] = cells.get(kk, 0) + int(r["cnt"])
@@ -345,7 +336,7 @@ def main() -> None:
 
         docs = replicate(docs0, k, ["doc_id"], salt_text=True)
         docs = docs.repartition(spark.sparkContext.defaultParallelism)
-        return dsir_importance_weights(docs, "text", "doc_id").count()
+        return dsir_importance_weights(docs).count()
 
     def dup_spans(k: int) -> int:
         """Cross-doc duplicated-passage spans: position explode (~=
@@ -592,7 +583,7 @@ def main() -> None:
         dd = replicate(docs0, k, ["doc_id"], salt_text=True).repartition(
             32
         )
-        return cdc_shared_chunks(dd, min_docs=2, min_len=8).count()
+        return cdc_shared_chunks(dd).count()
 
     def binary_code_scan(k: int) -> int:
         """Round-10 binary-quantization ANN: sign-pack the corpus

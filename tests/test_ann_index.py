@@ -17,13 +17,11 @@ from baseline_magician_spark.operators.ann_index import (
     ann_index_write,
     ivf_serve_persisted,
 )
-from baseline_magician_spark.operators.similarity import ivf_topk
+from baseline_magician_spark.operators.similarity import N_QUERY_VECS, ivf_topk
 
 from conftest import SF_SMOKE
 
 N_CENTROIDS = 8
-N_PROBE = 3
-K = 5
 
 
 @pytest.fixture()
@@ -52,23 +50,14 @@ def test_serve_from_disk_equals_in_memory(spark, tmp_index):
     emb = _emb(spark)
     cents = _cents(emb)
     ann_index_write(emb, tmp_index, cents)
-    qs = emb.where(F.col("vec_id") < 4)
+    qs = emb.where(F.col("vec_id") < N_QUERY_VECS)
     served = sorted(
         tuple(r)
-        for r in ivf_serve_persisted(
-            qs, tmp_index, k=K, n_probe=N_PROBE
-        ).collect()
+        for r in ivf_serve_persisted(qs, tmp_index).collect()
     )
     mem = sorted(
         tuple(r)
-        for r in ivf_topk(
-            emb,
-            k=K,
-            n_query_vecs=4,
-            n_centroids=N_CENTROIDS,
-            n_probe=N_PROBE,
-            centroids=cents,
-        ).collect()
+        for r in ivf_topk(emb, cents).collect()
     )
     assert served == mem
 
@@ -91,21 +80,17 @@ def test_incremental_add_equals_full_build(spark, tmp_index):
     new = emb.where(F.col("vec_id") % 2 == 1)
     ann_index_write(old, tmp_index, cents)
     ann_index_add(new, tmp_index)
-    qs = emb.where(F.col("vec_id") < 4)
+    qs = emb.where(F.col("vec_id") < N_QUERY_VECS)
     incr = sorted(
         tuple(r)
-        for r in ivf_serve_persisted(
-            qs, tmp_index, k=K, n_probe=N_PROBE
-        ).collect()
+        for r in ivf_serve_persisted(qs, tmp_index).collect()
     )
     full_path = tmp_index + "_full"
     try:
         ann_index_write(emb, full_path, cents)
         full = sorted(
             tuple(r)
-            for r in ivf_serve_persisted(
-                qs, full_path, k=K, n_probe=N_PROBE
-            ).collect()
+            for r in ivf_serve_persisted(qs, full_path).collect()
         )
     finally:
         shutil.rmtree(full_path, ignore_errors=True)

@@ -97,9 +97,7 @@ def test_rerank_is_subset_of_prefilter_and_ranked(spark):
         (r["query_id"], r["neighbor_id"])
         for r in binary_hamming_topk(df, queries, k=40).collect()
     }
-    out = binary_rerank_topk(
-        df, queries, k=10, prefilter_mult=4
-    ).collect()
+    out = binary_rerank_topk(df, queries).collect()
     per_q: dict[int, list] = {}
     for r in out:
         assert (r["query_id"], r["neighbor_id"]) in cand

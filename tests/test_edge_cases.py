@@ -103,7 +103,7 @@ def test_ngrams_udtf_matches_builtin_shingles(spark):
 
     from conftest import SF_SMOKE
 
-    register_ngrams_udtf(spark, "ngrams_udtf_t", n=2)
+    register_ngrams_udtf(spark, "ngrams_udtf_t")
     docs = load_table(spark, SF_SMOKE, "documents").where(F.col("doc_id") < 30)
     docs.createOrReplaceTempView("_udtf_docs")
     via_udtf = spark.sql(
@@ -132,21 +132,10 @@ def test_asof_inner_keeps_match_with_null_first_value(spark):
     )
     out = asof_join(
         left, right, on="k", left_ts="lts", right_ts="rts",
-        value_cols=["a", "b"], how="inner",
+        value_cols=["a", "b"], right_order="b",
     ).collect()
     assert len(out) == 1
     assert out[0]["asof_a"] is None and out[0]["asof_b"] == 5.0
-
-
-def test_salted_join_rejects_outer_sides(spark):
-    from baseline_magician_spark.operators.skew import salted_join
-
-    f = spark.createDataFrame([(1, "a")], "k int, v string")
-    d = spark.createDataFrame([(1, "x")], "k int, w string")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="outer side"):
-        salted_join(f, d, "k", how="full")
 
 
 def test_minhash_bands_reject_non_divisible(spark, edge_docs):
@@ -210,7 +199,7 @@ def test_pq_seed_vectors_encode_to_themselves(spark):
     from pyspark.sql import functions as F
 
     emb = load_table(spark, SF_ORACLE, "embeddings")
-    cbs = pq_seed_codebooks(emb, n_codes=16, m=4)
+    cbs = pq_seed_codebooks(emb)
     enc = pq_encode(emb.where(F.col("vec_id") < 16), cbs)
     rows = enc.select("vec_id", "codes", "_recon").collect()
     assert len(rows) == 16
@@ -233,7 +222,7 @@ def test_pq_adc_distance_nonnegative_and_ranked(spark):
     from conftest import SF_ORACLE
 
     emb = load_table(spark, SF_ORACLE, "embeddings")
-    rows = pq_adc_topk(emb, k=5, n_query_vecs=2).collect()
+    rows = pq_adc_topk(emb).collect()
     by_q = {}
     for r in rows:
         assert r["adc_dist"] >= 0.0

@@ -301,3 +301,36 @@ def test_compiled_division_matches_go_edges(spark):
     ).collect()[0]
     assert got["pinf"] == math.inf and got["ninf"] == -math.inf
     assert math.isnan(got["nan"]) and math.isnan(got["modnan"])
+
+
+# Threshold truncation on edge values (plans.baseline.cast_to_uint via
+# apply_thresholds): value -> float64 -> expression -> uint truncation
+# (negative and NaN -> 0, +Inf and overflow saturate at 2^63 - 1) ->
+# bits channels /1024/1024 -> zero deactivates the flag.
+LONG_MAX = 9223372036854775807
+THRESHOLD_EDGES = [
+    ("incoming_packets", "value - 2000", "pps", 0, False),
+    ("incoming_packets", "0 / 0", "pps", 0, False),
+    ("incoming_packets", "value / 0", "pps", LONG_MAX, True),
+    ("incoming_packets", "value * 1e30", "pps", LONG_MAX, True),
+    ("incoming_bits", "value / 0", "mbps", 8796093022208, True),
+    ("incoming_bits", "value * 1e30", "mbps", 8796093022208, True),
+    ("incoming_bits", "value * 2", "mbps", 0, False),  # below 1 MiB
+]
+
+
+def test_threshold_truncation_edges(spark):
+    from baseline_magician_spark.plans.baseline import (
+        apply_thresholds,
+        compile_channel_expressions,
+    )
+
+    row = spark.createDataFrame(
+        [(1000, 2000)], "packets_incoming long, bits_incoming long"
+    )
+    for channel, src, unit, threshold, flag in THRESHOLD_EDGES:
+        exprs = compile_channel_expressions({channel: src})
+        got = apply_thresholds(row, exprs).first()
+        case = (channel, src)
+        assert got[f"threshold_{unit}_incoming"] == threshold, case
+        assert got[f"ban_for_{unit}_incoming"] is flag, case

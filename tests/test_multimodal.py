@@ -74,7 +74,7 @@ def test_decode_media_custom_decoder_plugs_in(media):
 def test_frame_fanout_only_videos(media):
     from baseline_magician_spark.operators.multimodal import sample_frames
 
-    frames = sample_frames(media, every=4)
+    frames = sample_frames(media)
     rows = frames.collect()
     assert rows, "expected at least one sampled frame"
     video_ids = {

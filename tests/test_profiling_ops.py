@@ -112,7 +112,7 @@ def test_self_repetition_spans_keeps_first_occurrence(spark):
         # cross-doc only, and the tail has no within-doc 16-gram repeat
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    spans = self_repetition_spans(df, "text", "doc_id", k=16)
+    spans = self_repetition_spans(df, "text", "doc_id")
     got = {
         r["id"]: (r["span_start"], r["span_end"])
         for r in spans.collect()

@@ -125,18 +125,21 @@ def test_tfidf_ranks_distinctive_terms_first(spark):
             (1, "common rare1"),
             (2, "common rare2"),
             (3, "common rare3"),
+            (4, "common d4 c4 b4 a4"),
         ],
         "doc_id long, text string",
     )
-    out = tfidf_top_terms(docs, "doc_id", "text", k=2).collect()
+    out = tfidf_top_terms(docs).collect()
     top = {r.doc_id: r.term for r in out if r.rank == 1}
-    # the doc-specific term always outranks the corpus-wide one
-    assert top == {0: "rare0", 1: "rare1", 2: "rare2", 3: "rare3"}
+    # the doc-specific term always outranks the corpus-wide one; equal
+    # scores rank by term
+    assert top == {0: "rare0", 1: "rare1", 2: "rare2", 3: "rare3", 4: "a4"}
     by_key = {(r.doc_id, r.term): r for r in out}
     r0 = by_key[(0, "rare0")]
     assert r0.tf == 3 and r0.df == 1
-    # every doc contributes exactly k=2 rows (vocab is >= 2 per doc)
-    assert len(out) == 8
+    # the 2-term docs contribute both terms; doc 4 is cut to the top 3
+    assert len(out) == 8 + 3
+    assert sorted(r.term for r in out if r.doc_id == 4) == ["a4", "b4", "c4"]
 
 
 def test_chunking_invariants_property(spark):
@@ -187,7 +190,7 @@ def test_dsir_target_docs_score_higher(spark):
     from pyspark.sql import functions as F
 
     docs = load_table(spark, SF_ORACLE, "documents")
-    scores = dsir_importance_weights(docs, "text", "doc_id")
+    scores = dsir_importance_weights(docs)
     joined = scores.join(docs.select("doc_id", "lang"), "doc_id")
     means = {
         r["is_en"]: r["m"]

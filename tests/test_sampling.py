@@ -53,16 +53,13 @@ def test_split_is_narrow_no_shuffle(spark, docs):
 def test_stratified_sample_is_subset_and_respects_strata(spark, docs):
     from baseline_magician_spark.operators.sampling import stratified_sample
 
-    kept = stratified_sample(
-        docs, "lang", {"en": 1.0, "zh": 0.0}, "doc_id", seed="x",
-        default_fraction=0.2,
-    )
+    kept = stratified_sample(docs, "lang", {"en": 1.0, "zh": 0.0}, "doc_id")
     by_lang = {r["lang"]: r["n"] for r in
                kept.groupBy("lang").agg(F.count("*").alias("n")).collect()}
     en_total = docs.where(F.col("lang") == "en").count()
     assert by_lang.get("en") == en_total  # fraction 1.0 keeps all
     assert "zh" not in by_lang  # fraction 0.0 keeps none
-    for lang in ("de", "fr", "es"):  # default 0.2, loose bound
+    for lang in ("de", "fr", "es"):  # STRATA_DEFAULT 0.1, loose bound
         frac = by_lang.get(lang, 0) / docs.where(F.col("lang") == lang).count()
         assert frac < 0.45
 

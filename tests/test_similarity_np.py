@@ -14,6 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from baseline_magician_spark.operators.similarity import (
+    N_PROBE,
+    N_QUERY_VECS,
     brute_force_topk,
     ivf_cell_report,
     ivf_topk,
@@ -63,7 +65,7 @@ def cents(emb):
 
 @pytest.fixture(scope="module")
 def books(cents):
-    return pq_codebooks_from_seeds(cents, m=2)
+    return pq_codebooks_from_seeds(cents)
 
 
 def _rows(df):
@@ -84,18 +86,15 @@ def _pin(runtime_df, twin_df):
 
 def test_brute_force_topk(emb, cents):
     # probing every cell makes IVF exhaustive: same pairs, same ranks
-    q = emb.where(F.col("vec_id") < 4)
-    _pin(
-        brute_force_topk(emb, q, k=5),
-        ivf_topk(emb, k=5, n_query_vecs=4, n_probe=len(cents),
-                 centroids=cents),
-    )
+    # (N_PROBE cells, so IVF over the first N_PROBE centroids)
+    q = emb.where(F.col("vec_id") < N_QUERY_VECS)
+    _pin(brute_force_topk(emb, q), ivf_topk(emb, cents[:N_PROBE]))
 
 
 def test_ivf_topk(emb, cents):
     _pin(
-        ivf_topk(emb, k=5, n_query_vecs=3, n_probe=2, centroids=cents),
-        twins.ivf_topk_expr(emb, cents, k=5, n_query_vecs=3, n_probe=2),
+        ivf_topk(emb, cents),
+        twins.ivf_topk_expr(emb, cents),
     )
 
 
@@ -115,17 +114,15 @@ def test_pq_encode(emb, books):
 
 def test_pq_adc_topk(emb, books):
     _pin(
-        pq_adc_topk(emb, k=5, n_query_vecs=3, codebooks=books),
-        twins.pq_adc_topk_expr(emb, books, k=5, n_query_vecs=3),
+        pq_adc_topk(emb, codebooks=books),
+        twins.pq_adc_topk_expr(emb, books),
     )
 
 
 def test_ivfpq_topk(emb, cents, books):
     _pin(
-        ivfpq_topk(emb, cents, books, k=5, n_query_vecs=3, n_probe=2),
-        twins.ivfpq_topk_expr(
-            emb, cents, books, k=5, n_query_vecs=3, n_probe=2
-        ),
+        ivfpq_topk(emb, cents, books),
+        twins.ivfpq_topk_expr(emb, cents, books),
     )
 
 
@@ -158,7 +155,7 @@ def test_on_real_embeddings(spark):
         .select("vec_id", "embedding")
         .collect()
     )
-    books = pq_codebooks_from_seeds(cents, m=4)
+    books = pq_codebooks_from_seeds(cents)
     _pin(
         ivfpq_topk(emb, cents, books),
         twins.ivfpq_topk_expr(emb, cents, books),

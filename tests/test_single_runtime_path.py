@@ -1,6 +1,7 @@
 """One runtime path per operator: no public operator takes an ``impl``
-switch between renderings, and the runtime package never imports the
-test-only reference renderings (tests/expr_twins.py)."""
+switch between renderings, the runtime package never imports the
+test-only reference renderings (tests/expr_twins.py), and the count of
+settable options does not grow."""
 
 from __future__ import annotations
 
@@ -56,3 +57,29 @@ def test_runtime_never_imports_tests():
         if _imports_tests(node)
     ]
     assert not offenders, offenders
+
+
+# Ceiling on the package's settable options. A change that adds an
+# option raises this number in its own diff.
+OPTION_CEILING = 197
+
+
+def _defaulted_params(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> int:
+    args = fn.args
+    return len(args.defaults) + sum(d is not None for d in args.kw_defaults)
+
+
+def test_option_count_does_not_grow():
+    """Counts, by AST, every parameter with a default value of every
+    ``def`` (functions, methods and nested functions; not lambdas)
+    under baseline_magician_spark/: each one is a value a caller may
+    set, so each is an option."""
+    count = sum(
+        _defaulted_params(node)
+        for path in sorted(PKG_DIR.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    )
+    assert count <= OPTION_CEILING, (
+        f"{count} defaulted parameters, ceiling {OPTION_CEILING}"
+    )

@@ -55,6 +55,44 @@ def test_fetch_networks_and_auth_denied():
         fetch_networks_list("http://h:1", ("u", "p"), denied)
 
 
+def test_resolve_networks_cli_list_wins():
+    from baseline_magician_spark.config import BaselineConfig
+    from baseline_magician_spark.job import resolve_networks
+
+    api = FakeApi(networks=["10.1.0.0/16"])
+    cfg = BaselineConfig(networks=["10.9.0.0/16"])
+    assert resolve_networks(cfg, "10.0.0.0/24", api) == ["10.0.0.0/24"]
+    assert api.calls == []
+    assert resolve_networks(cfg, "", api) == ["10.1.0.0/16"]
+
+
+@pytest.mark.parametrize("failure", ["rest", "os"])
+def test_resolve_networks_failed_fetch_falls_back_to_config(failure):
+    from baseline_magician_spark.config import BaselineConfig
+    from baseline_magician_spark.job import resolve_networks
+    from baseline_magician_spark.sources.rest import RestError
+
+    def unreachable(method, url, auth):
+        if failure == "rest":
+            raise RestError("down")
+        raise OSError("connection refused")
+
+    cfg = BaselineConfig(networks=["10.9.0.0/16"])
+    assert resolve_networks(cfg, "", unreachable) == ["10.9.0.0/16"]
+
+
+def test_resolve_networks_bug_in_fetch_propagates():
+    from baseline_magician_spark.config import BaselineConfig
+    from baseline_magician_spark.job import resolve_networks
+
+    def broken(method, url, auth):
+        raise TypeError("programming error")
+
+    cfg = BaselineConfig(networks=["10.9.0.0/16"])
+    with pytest.raises(TypeError, match="programming error"):
+        resolve_networks(cfg, "", broken)
+
+
 def test_config_reference_keys_and_typo():
     from baseline_magician_spark.config import BaselineConfig
 
@@ -210,7 +248,7 @@ def test_jsonl_roundtrip_matches_parquet(spark, tmp_path):
 
     docs = load_table(spark, SF_ORACLE, "documents")
     out = str(tmp_path / "docs_jsonl")
-    write_jsonl(docs, out, n_shards=4)
+    write_jsonl(docs.repartition(4), out)
     back = read_jsonl(spark, out)
     assert back.columns == docs.columns
     assert back.count() == docs.count()

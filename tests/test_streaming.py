@@ -75,11 +75,9 @@ def test_streaming_baseline_matches_batch(spark, events_batch, events_stream):
     from baseline_magician_spark.queries.baseline_q import (
         METRIC_MAP,
         NETWORKS,
-    )
-    from baseline_magician_spark.streaming import streaming_baseline_aggregate
-    from baseline_magician_spark.streaming.baseline_stream import (
         ip_expr_from_user_id,
     )
+    from baseline_magician_spark.streaming import streaming_baseline_aggregate
 
     nets = networks_dataframe(spark, NETWORKS)
     got = run_to_memory(
@@ -151,11 +149,12 @@ def test_streaming_publish_hostgroups(spark, events_stream):
         compile_channel_expressions,
         networks_dataframe,
     )
-    from baseline_magician_spark.queries.baseline_q import METRIC_MAP, NETWORKS
-    from baseline_magician_spark.streaming import streaming_baseline_aggregate
-    from baseline_magician_spark.streaming.baseline_stream import (
+    from baseline_magician_spark.queries.baseline_q import (
+        METRIC_MAP,
+        NETWORKS,
         ip_expr_from_user_id,
     )
+    from baseline_magician_spark.streaming import streaming_baseline_aggregate
     from baseline_magician_spark.streaming.publish import (
         publish_hostgroups_stream,
     )
@@ -210,7 +209,7 @@ def test_stream_stream_join_matches_batch_join(spark, events_batch, events_strea
         streaming_click_purchase_join,
     )
 
-    stream_df = streaming_click_purchase_join(events_stream, max_delay_minutes=30)
+    stream_df = streaming_click_purchase_join(events_stream)
     assert stream_df.isStreaming
     got = run_to_memory(stream_df, mode="append")
 

@@ -51,7 +51,7 @@ def _rows(df):
 
 def test_terms_and_hashes_equal_jvm_adversarial(adv_df):
     got = _rows(
-        shingle_term_relation(adv_df, "text", id_cols=("doc_id",), n=3)
+        shingle_term_relation(adv_df, "text", id_cols=("doc_id",))
     )
     want = _rows(_jvm(adv_df, F.col("text"), 3))
     assert got == want
@@ -61,7 +61,7 @@ def test_terms_and_hashes_equal_jvm_adversarial(adv_df):
 def test_lowercased_column_expression(adv_df):
     got = _rows(
         shingle_term_relation(
-            adv_df, F.lower(F.col("text")), id_cols=("doc_id",), n=3
+            adv_df, F.lower(F.col("text")), id_cols=("doc_id",)
         )
     )
     want = _rows(_jvm(adv_df, F.lower(F.col("text")), 3))
@@ -77,7 +77,6 @@ def test_on_real_documents(spark):
             docs.select("doc_id", F.lower(F.col("text")).alias("text")),
             "text",
             id_cols=("doc_id",),
-            n=3,
         )
     )
     want = _rows(
@@ -96,7 +95,7 @@ def test_extra_id_cols_pass_through(spark):
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     out = shingle_term_relation(
-        docs, "text", id_cols=("doc_id", "lang"), n=3
+        docs, "text", id_cols=("doc_id", "lang")
     )
     assert out.columns == ["doc_id", "lang", "term", "_h"]
     joined = out.join(
